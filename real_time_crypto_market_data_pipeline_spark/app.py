@@ -12,6 +12,7 @@ Run:  python -m real_time_crypto_market_data_pipeline_spark --mode replay --repl
 from __future__ import annotations
 
 import argparse
+import json
 import signal
 import sys
 import threading
@@ -58,36 +59,23 @@ def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
 
     from .session import get_spark
-    from .streaming import pipeline as P
-    from .streaming import sinks as K
+    from .streaming.observability import last_counters
+    from .streaming.pipeline import start_pipeline
 
     spark = get_spark("okx-pipeline")
-    raw = P.read_raw_stream(
+    handles = start_pipeline(
         spark,
+        out_dir=args.out_dir,
         mode=args.mode,
         path=args.replay_path,
-        symbols=args.symbols,
-        channels=args.channels,
+        symbols=",".join(args.symbol_list),
+        channels=",".join(args.channel_list),
+        url=args.url,
+        console=not args.no_stdout,
+        jsonl=not args.no_jsonl,
+        csv_dir=args.csv_export or None,
+        csv_interval=args.csv_export_interval,
     )
-    events = P.normalized_stream(raw)
-
-    handles = P.PipelineHandles()
-    work = args.out_dir.rstrip("/")
-    if not args.no_jsonl:
-        handles.queries["jsonl"] = K.start_jsonl_sink(
-            events, f"{work}/events", f"{work}/_ckpt/jsonl"
-        )
-    if not args.no_stdout:
-        handles.queries["console"] = K.start_console_sink(
-            events, f"{work}/_ckpt/console"
-        )
-    if args.csv_export:
-        handles.queries["csv"] = K.start_csv_snapshot_sink(
-            events,
-            args.csv_export,
-            f"{work}/_ckpt/csv",
-            trigger_seconds=args.csv_export_interval,
-        )
 
     # K7: SIGINT/SIGTERM -> graceful stop (flushes in-flight microbatch)
     stop_event = threading.Event()
@@ -105,6 +93,12 @@ def main(argv: list[str] | None = None) -> int:
     else:  # pragma: no cover - interactive path
         stop_event.wait()
     handles.stop()
+    # decode-health counters of each sink's last microbatch, one JSON line
+    # per sink query
+    for name, q in handles.queries.items():
+        counters = last_counters(q)
+        if counters is not None:
+            print(json.dumps({"sink": name, **counters}), file=sys.stderr)
     spark.stop()
     return 0
 

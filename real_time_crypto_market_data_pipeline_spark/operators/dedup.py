@@ -62,7 +62,7 @@ def incremental_dedup(
     shuffle carries 32-byte keys - at 100 TB the hash set stays
     materialized between ingests (partitioned by hash prefix), the
     anti-join is a partition-local probe, a bloom prefilter cuts probe
-    volume. Streaming twin: dropDuplicatesWithinWatermark.
+    volume.
     """
     b = (
         batch.select(F.col("doc_id"), F.md5(F.col(text_col)).alias("text_hash"))
@@ -98,34 +98,6 @@ def _minhash_agg(exploded: DataFrame, num_hashes: int) -> DataFrame:
     return exploded.groupBy("doc_id").agg(
         *[F.min(F.md5(F.concat(F.lit(f"{j}|"), F.col("shingle")))).alias(f"sig{j}")
           for j in range(num_hashes)])
-
-
-def minhash_signature_col(
-    text_col: Column, num_hashes: int = DEFAULT_NUM_HASHES, shingle_n: int = 3,
-) -> Column:
-    """Row-local MinHash signature as ONE concatenated string Column.
-
-    The shuffle-free form of :func:`minhash_wide`: each component is
-    ``array_min(transform(shingles, s -> md5(j|s)))`` - bit-identical
-    to the batch ``min`` aggregate per seed, computed inside the row.
-    HOF lambdas run interpreted (~2x slower, see minhash_wide) - the
-    right trade exactly where a shuffle is unavailable: per-row
-    streaming ingest. Docs with fewer than ``shingle_n`` tokens fall
-    back to the exact-text hash, so they dedup as exact duplicates
-    instead of all colliding on one null signature.
-    """
-    sh = word_shingles(tokens_col(text_col), shingle_n)
-
-    # single-parameter lambda factory: a two-parameter lambda would
-    # make transform() pass (element, index) and silently bind the
-    # array index where the seed belongs
-    def _seed_hash(prefix: str):
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    sigs = [F.array_min(F.transform(sh, _seed_hash(f"{j}|")))
-            for j in range(num_hashes)]
-    return F.when(F.size(sh) > 0, F.concat_ws("", *sigs)).otherwise(
-        F.concat(F.lit("raw|"), F.md5(text_col)))
 
 
 # (The long-form signature-matrix + banding composition moved to

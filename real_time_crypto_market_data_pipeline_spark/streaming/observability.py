@@ -54,9 +54,16 @@ def observe_decode_health(raw: DataFrame, raw_col: str = "raw") -> DataFrame:
 
 
 def last_counters(query) -> dict | None:
-    """Read the most recent batch's counters from a StreamingQuery."""
-    progress = query.lastProgress
-    if not progress:
-        return None
-    observed = progress.get("observedMetrics", {})
-    return observed.get(OBSERVATION_NAME)
+    """Counters of the query's most recent microbatch that read input,
+    with its ``batch_id``; None before the first such batch.
+
+    A query with no new input still reports an idle progress every
+    ``spark.sql.streaming.noDataProgressEventInterval`` (10 s) without
+    observed metrics, so ``lastProgress`` alone loses the counters.
+    """
+    for progress in reversed(query.recentProgress):
+        observed = progress.get("observedMetrics") or {}
+        if OBSERVATION_NAME in observed:
+            return {"batch_id": progress["batchId"],
+                    **observed[OBSERVATION_NAME].asDict()}
+    return None

@@ -10,7 +10,9 @@ backpressure, and restart semantics the reference hand-rolled.
       -> normalize_frames (identical Catalyst exprs as batch - the
          batch/streaming unification is the point of Structured
          Streaming: one definition, two physical plans)
-      -> [jsonl sink]  [console sink]  [csv snapshot]  [windowed stats]
+      -> [jsonl sink]  [console sink]  [csv snapshot]
+
+``start_pipeline`` is that wiring, and the CLI (``app.main``) runs it.
 """
 
 from __future__ import annotations
@@ -33,8 +35,14 @@ def read_raw_stream(
     batch_size: int = 100,
     symbols: str = "BTC-USDT,ETH-USDT",
     channels: str = "books5",
+    *,
+    url: str | None = None,
 ) -> DataFrame:
-    """P1: CLI/config surface -> readStream options (app.py:150-196)."""
+    """P1: CLI/config surface -> readStream options (app.py:150-196).
+
+    ``url`` is the live WebSocket endpoint; None keeps the source's
+    default (the OKX public feed).
+    """
     register(spark)
     reader = (
         spark.readStream.format("okx_frames")
@@ -45,12 +53,9 @@ def read_raw_stream(
     )
     if path is not None:
         reader = reader.option("path", path)
+    if url is not None:
+        reader = reader.option("url", url)
     return reader.load()
-
-
-def normalized_stream(raw: DataFrame) -> DataFrame:
-    """S5+F1-F9 over the stream - the same operators as batch."""
-    return normalize_frames(raw)
 
 
 def windowed_latency_stats(
@@ -99,13 +104,25 @@ class PipelineHandles:
 
 def start_pipeline(
     spark: SparkSession,
-    replay_path: str,
-    work_dir: str,
-    enable_console: bool = False,
-    enable_jsonl: bool = True,
-    enable_csv: bool = True,
+    *,
+    out_dir: str,
+    mode: str = "replay",
+    path: str | None = None,
+    symbols: str = "BTC-USDT,ETH-USDT",
+    channels: str = "books5",
+    url: str | None = None,
+    console: bool = False,
+    jsonl: bool = True,
+    csv_dir: str | None = None,
+    csv_interval: float = 30.0,
 ) -> PipelineHandles:
     """P2: full dataflow wiring with multi-sink fan-out (app.py:80-109).
+
+    Every parameter is one CLI flag. JSONL lines land under
+    ``{out_dir}/events``, each sink checkpoints to ``{out_dir}/_ckpt/<sink>``,
+    and the CSV snapshot (off when ``csv_dir`` is None) overwrites
+    ``csv_dir`` every ``csv_interval`` seconds. The raw stream carries the
+    decode-health counters, so every sink query reports them.
 
     Each sink is an independent checkpointed query over the same
     normalized lineage - K6's per-sink error isolation comes from
@@ -113,65 +130,25 @@ def start_pipeline(
     """
     from .observability import observe_decode_health
 
-    raw = observe_decode_health(read_raw_stream(spark, mode="replay", path=replay_path))
-    events = normalized_stream(raw)
+    raw = observe_decode_health(read_raw_stream(
+        spark, mode=mode, path=path, symbols=symbols, channels=channels, url=url
+    ))
+    events = normalize_frames(raw)
+    out = out_dir.rstrip("/")
     handles = PipelineHandles()
-    if enable_jsonl:
+    if jsonl:
         handles.queries["jsonl"] = K.start_jsonl_sink(
-            events, f"{work_dir}/data", f"{work_dir}/ckpt_jsonl"
+            events, f"{out}/events", f"{out}/_ckpt/jsonl"
         )
-    if enable_console:
+    if console:
         handles.queries["console"] = K.start_console_sink(
-            events, f"{work_dir}/ckpt_console"
+            events, f"{out}/_ckpt/console"
         )
-    if enable_csv:
+    if csv_dir is not None:
         handles.queries["csv"] = K.start_csv_snapshot_sink(
-            events, f"{work_dir}/metrics_csv", f"{work_dir}/ckpt_csv"
+            events, csv_dir, f"{out}/_ckpt/csv", trigger_seconds=csv_interval
         )
     return handles
-
-
-def streaming_exact_dedup(
-    events: DataFrame, watermark: str = "10 seconds"
-) -> DataFrame:
-    """X1 (streaming): exact dedup within an event-time watermark.
-
-    ``dropDuplicatesWithinWatermark`` keeps per-key state only until
-    the watermark passes - bounded state for an unbounded stream, the
-    scalable form of streaming dedup. Key = (symbol, channel,
-    ts_exchange_ms) - the natural identity of a market event.
-    """
-    keyed = events.withColumn(
-        "event_time", F.timestamp_millis(F.col("ts_exchange_ms"))
-    ).withWatermark("event_time", watermark)
-    return keyed.dropDuplicatesWithinWatermark(["symbol", "channel", "ts_exchange_ms"])
-
-
-def streaming_near_dedup(
-    docs: DataFrame,
-    watermark: str = "10 minutes",
-    time_col: str = "event_time",
-) -> DataFrame:
-    """X2 (streaming): ingest-time near-dup suppression, bounded state.
-
-    Keys the watermark dedup on the row-local MinHash signature
-    (``dedup.minhash_signature_col`` - computed per row with HOFs, no shuffle,
-    so the only stateful operator is the dedup itself): signature-identical
-    documents - same shingle SET, i.e. whitespace variants, re-serializations,
-    Jaccard ~= 1 rewraps - are dropped inline, with per-signature state held
-    only until the watermark passes. Partial-overlap near-dups (banded-LSH
-    recall) remain the offline batch pass (``dedup.lsh_candidate_pairs``): the
-    standard production split between cheap inline suppression at ingest and
-    thorough offline dedup. State key is one 256-char string per unique
-    signature in the watermark horizon - at 100 TB/day the horizon, not the
-    corpus, bounds memory.
-    """
-    from ..operators.dedup import minhash_signature_col
-
-    keyed = docs.withColumn(
-        "minhash_sig", minhash_signature_col(F.col("text"))
-    ).withWatermark(time_col, watermark)
-    return keyed.dropDuplicatesWithinWatermark(["minhash_sig"])
 
 
 def stream_stream_enrich(
@@ -228,91 +205,6 @@ def stream_stream_enrich(
             "px_vs_mid"
         ),
     )
-
-
-def windowed_ohlc(
-    events: DataFrame,
-    window: str = "1 minute",
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Streaming OHLC candles per symbol from normalized trade events.
-
-    The streaming twin of q_ohlc_bars: open/close are min_by/max_by on the
-    event timestamp inside a tumbling event-time window (incremental
-    - the state store keeps one candle-in-progress per (symbol, open window)),
-      volume-weighted price included since trades carry size. The watermark
-      closes bars and bounds state exactly like the other windowed aggregates.
-    """
-    trades = events.where(F.col("trade").isNotNull()).select(
-        "symbol",
-        F.timestamp_millis(F.col("ts_exchange_ms")).alias("event_time"),
-        F.col("ts_exchange_ms").alias("ms"),
-        F.col("trade.price").alias("price"), F.col("trade.size").alias("size"))
-    return (
-        trades.withWatermark("event_time", watermark)
-        .groupBy("symbol", F.window("event_time", window))
-        .agg(
-            F.min_by("price", "ms").alias("open"),
-            F.max("price").alias("high"),
-            F.min("price").alias("low"),
-            F.max_by("price", "ms").alias("close"),
-            F.sum("size").alias("volume"),
-            (F.sum(F.col("price") * F.col("size")) / F.sum("size")).alias("vwap"),
-            F.count(F.lit(1)).cast("long").alias("n_trades"),
-        )
-    )
-
-
-def streaming_session_stats(
-    events: DataFrame,
-    gap_ms: int = 86_400_000,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Streaming twin of q_session_stats via native ``session_window``:
-    one open session per user in the state store, gap-merge on arrival,
-    watermark-driven close - O(open sessions) state, not O(events).
-
-    Gap semantics: ``session_window`` splits when an event lands AT
-    last + gap, where the batch lag-rule (``ms - prev > gap``) still
-    merges it; a window gap of ``gap_ms + 1`` makes the rules identical,
-    so emissions match the batch query bit-for-bit (parity test replays
-    sf0.01). Sessions are keyed by (user_id, start_ms): the batch
-    ordinal session_id needs total history - the one column a stream
-    cannot reproduce; the other four columns match exactly.
-    """
-    ev = events.select(
-        "user_id", F.timestamp_millis(F.col("ms")).alias("event_time"),
-        F.col("ms"), F.col("value"))
-    return (
-        ev.withWatermark("event_time", watermark)
-        .groupBy("user_id",
-                 F.session_window("event_time", f"{gap_ms + 1} milliseconds"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.min("ms").cast("long").alias("start_ms"),
-            (F.max("ms") - F.min("ms")).cast("long").alias("duration_ms"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("long")
-            .alias("value_cents"),
-        )
-        .drop("session_window")
-    )
-
-
-def enrich_with_static(
-    events: DataFrame, dim: DataFrame, on: str = "symbol", how: str = "left"
-) -> DataFrame:
-    """Stream-static enrichment: join the event stream against a batch
-    dimension table (instrument metadata, tick sizes, listing info).
-
-    Stream-static joins are STATELESS - no watermark, no state store:
-    Spark re-evaluates the static side every microbatch (so a dim
-    refreshed in place is picked up on the next trigger) and the
-    explicit broadcast keeps the stream side shuffle-free. This is the
-    right shape for slowly-changing reference data; only stream-stream
-    joins (stream_stream_enrich) need watermarked state.
-    """
-    return events.join(F.broadcast(dim), on=on, how=how)
 
 
 def streaming_temperature_mix(

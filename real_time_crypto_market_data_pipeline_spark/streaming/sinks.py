@@ -328,146 +328,26 @@ def start_exact_layout_jsonl_sink(
     )
 
 
-def merge_upsert_batch(
-    spark,
-    batch_df: DataFrame,
-    target_dir: str,
-    key_col: str,
-    seq_col: str,
-    num_buckets: int = 16,
-) -> None:
-    """Apply one change batch to a key-bucketed parquet target (MERGE).
-
-    The lakehouse MERGE INTO pattern without a table format: the target
-    lives as parquet partitioned by ``bucket = pmod(xxhash64(key), B)``,
-    and an upsert batch rewrites ONLY the bucket partitions its keys
-    hash into - every other partition's files are untouched. Work per
-    batch is O(touched buckets), not O(target); pick ``num_buckets``
-    so one bucket ~= a comfortable rewrite unit (a few hundred MB at
-    100 TB scale, like Delta's OPTIMIZE file sizing).
-
-    Within a batch the latest row per key wins (``seq_col`` descending
-    - CDC LSN / offset order), matching MERGE's one-source-row-per-key
-    contract. Replaying the same batch is idempotent by construction:
-    upserting identical rows again converges to the same target state.
-    """
-    from pyspark.sql import Window
-
-    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets)).cast("int")
-    w = Window.partitionBy(key_col).orderBy(F.col(seq_col).desc())
-    latest = (
-        batch_df.withColumn("bucket", bucket)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    import os
-
-    affected = [r.bucket for r in latest.select("bucket").distinct().collect()]
-    if not affected:
-        return
-    existing = [
-        f"{target_dir}/bucket={b}"
-        for b in affected
-        if os.path.isdir(f"{target_dir}/bucket={b}")
-    ]
-    if existing:
-        current = spark.read.option("basePath", target_dir).parquet(*existing)
-        kept = current.join(latest.select(key_col), on=key_col, how="left_anti")
-        merged = kept.unionByName(latest)
-    else:
-        merged = latest
-    # the write overwrites partitions the plan is also reading; cut the
-    # lineage by materializing first (the read-then-overwrite rule)
-    merged = merged.localCheckpoint()
-    (
-        merged.repartition("bucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(target_dir)
-    )
-
-
-def start_merge_upsert_sink(
-    updates: DataFrame,
-    target_dir: str,
-    checkpoint: str,
-    key_col: str,
-    seq_col: str,
-    num_buckets: int = 16,
-    trigger_seconds: float = 1.0,
-) -> StreamingQuery:
-    """Streaming CDC apply: foreachBatch MERGE into a bucketed target.
-
-    The streaming half of the CDC story (q_merge_upsert is the batch plan
-    shape): each microbatch of change rows upserts into the parquet target via
-    :func:`merge_upsert_batch`, rewriting only the key-buckets the batch
-    touches. On Delta/Iceberg this body becomes a literal MERGE INTO; the
-    bucket-pruned rewrite is what that MERGE executes underneath.
-    """
-
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_upsert_batch(
-            batch_df.sparkSession, batch_df, target_dir, key_col, seq_col, num_buckets
-        )
-
-    return (
-        updates.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-
-
-def _sum_stats_merge_exprs() -> list:
-    """Merge expressions for :func:`~..operators.metrics.rollup_partials`
-    partials: integer sums add, min/max fold."""
-    return [
-        F.sum("n").cast("long").alias("n"),
-        F.sum("s").alias("s"),
-        F.sum("ss").alias("ss"),
-        F.min("mn").alias("mn"),
-        F.max("mx").alias("mx"),
-    ]
-
-
-def _ohlc_merge_exprs() -> list:
-    """Merge expressions for :func:`~..operators.metrics.ohlc_partials`
-    partials: argmin/argmax tick structs fold, counts add."""
-    return [
-        F.min("o").alias("o"),
-        F.max("c").alias("c"),
-        F.max("high").alias("high"),
-        F.min("low").alias("low"),
-        F.sum("n_ticks").cast("long").alias("n_ticks"),
-    ]
-
-
 def rollup_merge_batch(
     spark,
     batch_partials: DataFrame,
     target_dir: str,
     keys: list[str],
-    merge_exprs: list | None = None,
 ) -> None:
     """Additively merge one batch of mergeable partials into the stored
     partials table, rewriting only the touched time-bucket partitions.
 
     The incremental half of the continuous-aggregate story
-    (operators/metrics.rollup_partials / ohlc_partials): the target lives as
-    parquet partitioned by the time ``bucket`` - the hypertable chunk layout -
-    and a streaming microbatch merges with ``merge_exprs`` (integer partials
-    add / argmin-argmax structs fold), so the stored state stays exactly equal
-    to a from-scratch rollup of everything ingested. A stream arrives roughly
-    time-ordered, so each batch touches one or two hour partitions; work per
-    batch is O(touched buckets), never O(history).
+    (operators/metrics.rollup_partials): the target lives as parquet
+    partitioned by the time ``bucket`` - the hypertable chunk layout - and a
+    streaming microbatch merges by adding the integer partials and folding
+    min/max, so the stored state stays exactly equal to a from-scratch rollup
+    of everything ingested. A stream arrives roughly time-ordered, so each
+    batch touches one or two hour partitions; work per batch is O(touched
+    buckets), never O(history).
     """
     import os
 
-    if merge_exprs is None:
-        merge_exprs = _sum_stats_merge_exprs()
     affected = [
         r.bucket for r in batch_partials.select("bucket").distinct().collect()
     ]
@@ -490,7 +370,13 @@ def rollup_merge_batch(
         merged = (
             current.unionByName(batch_partials)
             .groupBy(*keys, "bucket")
-            .agg(*merge_exprs)
+            .agg(
+                F.sum("n").cast("long").alias("n"),
+                F.sum("s").alias("s"),
+                F.sum("ss").alias("ss"),
+                F.min("mn").alias("mn"),
+                F.max("mx").alias("mx"),
+            )
         )
     # the write overwrites partitions the plan also reads; cut lineage
     merged = merged.localCheckpoint()
@@ -503,16 +389,22 @@ def rollup_merge_batch(
     )
 
 
-def _start_partials_sink(
+def start_rollup_sink(
     events: DataFrame,
     target_dir: str,
     checkpoint: str,
     keys: list[str],
-    to_partials,
-    merge_exprs: list,
-    trigger_seconds: float,
+    value_col: str,
+    ts_ms_col: str,
+    grain_ms: int = 3_600_000,
+    scale: int = 100,
+    trigger_seconds: float = 1.0,
 ) -> StreamingQuery:
-    """Shared foreachBatch body for the continuous-aggregate sinks.
+    """Streaming continuous aggregate: foreachBatch additive rollup merge.
+
+    Each microbatch is reduced to (keys, bucket) integer partials and merged
+    into the stored partials table; coarse reports read the partials via
+    ``read_rollup`` without ever rescanning raw events.
 
     Additive merge is not naturally idempotent, so replayed epochs are skipped
     via a ``_last_epoch`` marker renamed into place only after the merge
@@ -533,6 +425,8 @@ def _start_partials_sink(
     """
     import os
 
+    from ..operators.metrics import rollup_partials
+
     marker = os.path.join(target_dir, "_last_epoch")
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
@@ -550,8 +444,8 @@ def _start_partials_sink(
                 return
         except (FileNotFoundError, ValueError):
             pass
-        bp = to_partials(batch_df)
-        rollup_merge_batch(batch_df.sparkSession, bp, target_dir, keys, merge_exprs)
+        bp = rollup_partials(batch_df, keys, value_col, ts_ms_col, grain_ms, scale=scale)
+        rollup_merge_batch(batch_df.sparkSession, bp, target_dir, keys)
         os.makedirs(target_dir, exist_ok=True)
         tmp = marker + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
@@ -564,75 +458,6 @@ def _start_partials_sink(
         .option("checkpointLocation", checkpoint)
         .trigger(processingTime=f"{trigger_seconds} seconds")
         .start()
-    )
-
-
-def start_rollup_sink(
-    events: DataFrame,
-    target_dir: str,
-    checkpoint: str,
-    keys: list[str],
-    value_col: str,
-    ts_ms_col: str,
-    grain_ms: int = 3_600_000,
-    scale: int = 100,
-    trigger_seconds: float = 1.0,
-) -> StreamingQuery:
-    """Streaming continuous aggregate: foreachBatch additive rollup merge.
-
-    Each microbatch is reduced to (keys, bucket) integer partials and merged
-    into the stored partials table; coarse reports read the partials via
-    ``read_rollup`` without ever rescanning raw events. Epoch-replay and
-    checkpoint-reset protection in :func:`_start_partials_sink`.
-    """
-    from ..operators.metrics import rollup_partials
-
-    return _start_partials_sink(
-        events,
-        target_dir,
-        checkpoint,
-        keys,
-        lambda df: rollup_partials(
-            df, keys, value_col, ts_ms_col, grain_ms, scale=scale
-        ),
-        _sum_stats_merge_exprs(),
-        trigger_seconds,
-    )
-
-
-def start_ohlc_sink(
-    events: DataFrame,
-    target_dir: str,
-    checkpoint: str,
-    keys: list[str],
-    value_col: str,
-    ts_ms_col: str,
-    tiebreak_col: str,
-    grain_ms: int = 3_600_000,
-    trigger_seconds: float = 1.0,
-) -> StreamingQuery:
-    """Streaming OHLC candles: the continuous-aggregate sink for order
-    statistics.
-
-    Each microbatch becomes (keys, bucket) candle partials with open/close
-    stored as argmin/argmax tick structs (operators/metrics.ohlc_partials);
-    struct min/max merges associatively, so the stored hourly candles stay
-    exactly equal to candles computed from every raw tick ever ingested, and
-    ``read_ohlc_rollup`` serves any coarser chart grain without touching tick
-    data - the streaming half of q_ohlc_rollup.
-    """
-    from ..operators.metrics import ohlc_partials
-
-    return _start_partials_sink(
-        events,
-        target_dir,
-        checkpoint,
-        keys,
-        lambda df: ohlc_partials(
-            df, keys, value_col, ts_ms_col, tiebreak_col, grain_ms
-        ),
-        _ohlc_merge_exprs(),
-        trigger_seconds,
     )
 
 
@@ -650,21 +475,6 @@ def read_rollup(
         "bucket", F.col("bucket").cast("long")
     )
     return merge_rollup(partials, keys, coarse_factor, scale=scale)
-
-
-def read_ohlc_rollup(
-    spark,
-    target_dir: str,
-    keys: list[str],
-    coarse_factor: int = 1,
-) -> DataFrame:
-    """Answer coarse-grain candles from the stored streaming partials."""
-    from ..operators.metrics import merge_ohlc
-
-    partials = spark.read.parquet(target_dir).withColumn(
-        "bucket", F.col("bucket").cast("long")
-    )
-    return merge_ohlc(partials, keys, coarse_factor)
 
 
 def lsh_dedup_batch_writer(index_dir: str, admitted_dir: str, checkpoint: str,

@@ -80,11 +80,8 @@ def streaming_staleness(events: DataFrame) -> DataFrame:
     )
 
 
-# EWMA quote tracker and idle-gap flush on the GroupState API.
-# transform_state.py carries the same two operators on Spark 4's
-# transformWithStateInPandas (typed state + timers); that protocol
-# needs google.protobuf at runtime, so THESE are the executable-
-# everywhere versions: identical semantics, one GroupState row per key.
+# EWMA quote tracker and idle-gap flush on the GroupState API: one
+# GroupState row per key.
 
 EWMA_OUTPUT_DDL = (
     "symbol STRING, ts_exchange_ms LONG, mid DOUBLE, spread DOUBLE, "
@@ -321,159 +318,4 @@ def streaming_realized_vol(events: DataFrame) -> DataFrame:
     return _with_state(
         events.select(*cols), ["user_id"], _rvol_fn,
         RVOL_OUTPUT_DDL, _RVOL_STATE_DDL, "update",
-    )
-
-
-DD_OUTPUT_DDL = "user_id LONG, n_obs LONG, peak DOUBLE, max_drawdown DOUBLE"
-_DD_STATE_DDL = "runmax DOUBLE, maxdd DOUBLE, n LONG"
-
-
-def _drawdown_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    runmax, maxdd, n = state.get if state.exists else (None, 0.0, 0)
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["ms", "event_id"], kind="stable")
-        for p in pdf["value"]:
-            p = float(p)
-            if p <= 0:
-                continue  # q_drawdown's positivity filter
-            runmax = p if runmax is None or p > runmax else runmax
-            dd = (runmax - p) / runmax
-            maxdd = dd if dd > maxdd else maxdd
-            n += 1
-    state.update((runmax, maxdd, n))
-    if n > 0:
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_obs": [n],
-                "peak": [runmax],
-                "max_drawdown": [maxdd],
-            }
-        )
-
-
-def streaming_drawdown(events: DataFrame) -> DataFrame:
-    """Streaming twin of q_drawdown: running peak + max drawdown.
-
-    Like `streaming_realized_vol`, the estimator is O(1)-state by
-    construction: (running max, max drawdown, count) - both running
-    quantities are monotone, so cross-batch accumulation in event
-    order is exactly the batch window's running max, and the latest
-    emission per key equals the batch query over everything ingested
-    (parity test in tests/test_streaming.py). `streaming_realized_vol`'s
-    ordering caveat applies to the DRAWDOWN ratio: n_obs and peak are
-    order-insensitive, but a late low price arriving after a later
-    high inflates max_drawdown vs the batch window; parity is
-    guaranteed only for event-time-ordered arrival across microbatches.
-    """
-    cols = ["user_id", "ms", "event_id", "value"]
-    return _with_state(
-        events.select(*cols), ["user_id"], _drawdown_fn,
-        DD_OUTPUT_DDL, _DD_STATE_DDL, "update",
-    )
-
-
-FUNNEL_OUTPUT_DDL = (
-    "user_id LONG, t_view LONG, t_click LONG, t_purchase LONG, stages_reached LONG"
-)
-_FUNNEL_STATE_DDL = "t_view LONG, t_click LONG, t_purchase LONG"
-_STAGE_RANK = {"view": 0, "click": 1, "purchase": 2}
-
-
-def _funnel_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    tv, tc, tp = state.get if state.exists else (None, None, None)
-    # concat BEFORE sorting (like the EWMA fn): a >1-Arrow-chunk group
-    # repairs disorder across its whole microbatch, not per chunk; and
-    # stage-rank before event_id makes views process before clicks
-    # before purchases within one ms (the batch RANGE frame includes
-    # equal-ms peers - a click AT the first view's ms counts).
-    batches = [p for p in pdfs if len(p)]
-    if batches:
-        pdf = pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]
-        pdf = pdf.assign(_r=pdf["event_type"].map(_STAGE_RANK)).dropna(subset=["_r"])
-        pdf = pdf.sort_values(["ms", "_r", "event_id"], kind="stable")
-        for ms, r in zip(pdf["ms"], pdf["_r"]):
-            ms = int(ms)
-            if r == 0:
-                tv = ms if tv is None else tv
-            elif r == 1 and tv is not None and tc is None and ms >= tv:
-                tc = ms
-            elif r == 2 and tc is not None and tp is None and ms >= tc:
-                tp = ms
-    state.update((tv, tc, tp))
-    if tv is not None:
-        yield pd.DataFrame({
-            "user_id": [user_id], "t_view": [tv],
-            "t_click": pd.array([tc], dtype="Int64"),
-            "t_purchase": pd.array([tp], dtype="Int64"),
-            "stages_reached": [3 if tp is not None else 2 if tc is not None else 1],
-        })
-
-
-def streaming_funnel(events: DataFrame) -> DataFrame:
-    """Streaming twin of q_funnel: strict-order view->click->purchase.
-
-    Per-user state is the three stage-entry timestamps - 24 bytes per user,
-    O(users) total, vs the batch plan's full per-user sort. Each microbatch
-    emits the user's updated funnel row (update mode; the latest emission per
-    user == q_funnel over everything ingested - stage timestamps only fill in,
-    never move, under ordered arrival). `streaming_realized_vol`'s ordering
-    caveat applies: parity needs event-time-ordered arrival across
-    microbatches (the in-batch sort repairs the rest).
-    """
-    cols = ["user_id", "ms", "event_id", "event_type"]
-    return _with_state(
-        events.select(*cols), ["user_id"], _funnel_fn,
-        FUNNEL_OUTPUT_DDL, _FUNNEL_STATE_DDL, "update",
-    )
-
-
-RETENTION_OUTPUT_DDL = "cohort_week LONG, week_offset LONG"
-_RETENTION_STATE_DDL = "cohort_week LONG, seen ARRAY<LONG>"
-_WEEK_MS = 604_800_000
-
-
-def _retention_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    cohort, seen = state.get if state.exists else (None, [])
-    seen = set(seen or [])
-    weeks: set[int] = set()
-    for pdf in pdfs:  # whole-batch week set first: chunk order never matters
-        weeks.update(int(ms) // _WEEK_MS for ms in pdf["ms"])
-    if cohort is None and weeks:  # first-batch min = min under ordered arrival
-        cohort = min(weeks)
-    fresh = sorted(weeks - seen)
-    seen |= weeks
-    state.update((cohort, sorted(seen)))
-    if fresh:
-        yield pd.DataFrame(
-            {"cohort_week": cohort, "week_offset": [w - cohort for w in fresh]}
-        )
-
-
-def streaming_retention_cohort(events: DataFrame) -> DataFrame:
-    """Streaming twin of q_retention_cohort: cohort-presence increments.
-
-    Emits exactly ONE (cohort_week, week_offset) row per newly seen
-    (user, week) - the stream form of the batch query's DISTINCT
-    presence step, with the user's cohort (first-seen week) resolved
-    from state. The retention matrix is the ADDITIVE count over these
-    increments (`GROUP BY cohort_week, week_offset` - the memory-sink
-    count in the parity test, or a `start_rollup_sink`-style merge at
-    scale); emitting it directly would chain a second stateful
-    aggregation onto applyInPandasWithState, unsupported in one query.
-    State is (cohort_week, seen-weeks array) - |users| x |weeks|
-    total, the batch plan's distinct-exchange cardinality. Caveat: the
-    first-processed week becomes the cohort; parity needs ordered replay.
-    """
-    return _with_state(
-        events.select("user_id", "ms"), ["user_id"], _retention_fn,
-        RETENTION_OUTPUT_DDL, _RETENTION_STATE_DDL, "append",
     )

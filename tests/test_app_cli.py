@@ -32,12 +32,13 @@ def test_replay_requires_path():
         parse_args(["--mode", "replay"])
 
 
-def test_main_replay_end_to_end(tmp_path):
+def test_main_replay_end_to_end(tmp_path, capsys):
     frames = [
         '{"arg": {"channel": "books5", "instId": "BTC-USDT"},'
         ' "data": [{"ts": "1000", "bids": [["10", "1", "0", "1"]], "asks": [["11", "1", "0", "1"]]}]}',
         '{"arg": {"channel": "books5", "instId": "BTC-USDT"},'
         ' "data": [{"ts": "2000", "bids": [["10", "2", "0", "1"]], "asks": [["11", "2", "0", "1"]]}]}',
+        "{not json",
     ]
     replay = tmp_path / "frames.jsonl"
     replay.write_text("\n".join(frames) + "\n")
@@ -63,3 +64,40 @@ def test_main_replay_end_to_end(tmp_path):
     rec = json.loads(open(written[0]).readline())
     assert rec["symbol"] == "BTC-USDT"
     assert any(f.endswith(".csv") for _r, _d, fs in os.walk(csv_dir) for f in fs)
+    # one decode-counter line per sink query on stderr
+    counters = [json.loads(ln) for ln in capsys.readouterr().err.splitlines()
+                if ln.startswith('{"sink"')]
+    assert {c["sink"] for c in counters} == {"jsonl", "csv"}
+    for c in counters:
+        assert c["batch_id"] == 0
+        assert c["frames_total"] == 3
+        assert c["decode_errors"] == 1
+        assert c["control_frames"] == 0
+
+
+def test_main_passes_url_to_source(tmp_path, monkeypatch):
+    """--url reaches the source as its ``url`` option."""
+    from pyspark.sql.streaming import DataStreamReader
+
+    seen = []
+    real_option = DataStreamReader.option
+
+    def spy(self, key, value):
+        seen.append((key, value))
+        return real_option(self, key, value)
+
+    monkeypatch.setattr(DataStreamReader, "option", spy)
+    replay = tmp_path / "frames.jsonl"
+    replay.write_text("pong\n")
+    rc = main(
+        [
+            "--mode", "replay",
+            "--replay-path", str(replay),
+            "--url", "wss://example/ws",
+            "--out-dir", str(tmp_path / "out"),
+            "--no-stdout",
+            "--no-jsonl",
+        ]
+    )
+    assert rc == 0
+    assert ("url", "wss://example/ws") in seen

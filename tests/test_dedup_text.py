@@ -457,27 +457,6 @@ def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
     assert any(files for _, _, files in os.walk(eff))  # data really landed
 
 
-def test_rowlocal_minhash_signature_matches_batch(spark):
-    """minhash_signature_col (HOF, shuffle-free, the streaming form)
-    is bit-identical to minhash_wide's exploded groupBy aggregation
-    for every doc that has shingles."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    wide = D.minhash_wide(docs)
-    batch = wide.select(
-        "doc_id",
-        F.concat_ws("", *[F.col(f"sig{j}") for j in range(8)]).alias("sig"),
-    )
-    local = docs.select(
-        "doc_id", D.minhash_signature_col(F.col("text")).alias("sig")
-    )
-    joined = batch.alias("b").join(local.alias("l"), "doc_id")
-    n = batch.count()
-    assert n > 0
-    assert joined.where(F.col("b.sig") == F.col("l.sig")).count() == n
-
-
 def test_temperature_mix_rates_and_determinism(spark):
     # 16 docs in lang a, 4 in lang b: rate_a = sqrt(4/16) = 0.5,
     # rate_b = 1.0 - every b doc must survive, and the kept set is a

@@ -84,6 +84,7 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path_factory):
 def test_streaming_restart_resumes_from_checkpoint(spark, tmp_path):
     """Kill a query mid-stream, restart with the same checkpoint and a
     grown input: output contains every frame exactly once."""
+    from real_time_crypto_market_data_pipeline_spark.operators.normalize import normalize_frames
     from real_time_crypto_market_data_pipeline_spark.sources.okx_ws import write_replay_file
     from real_time_crypto_market_data_pipeline_spark.streaming import pipeline as P
 
@@ -101,7 +102,7 @@ def test_streaming_restart_resumes_from_checkpoint(spark, tmp_path):
     def run_once():
         raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=10)
         q = (
-            P.normalized_stream(raw)
+            normalize_frames(raw)
             .selectExpr("symbol", "ts_exchange_ms")
             .writeStream.outputMode("append")
             .format("parquet")

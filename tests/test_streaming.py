@@ -8,6 +8,7 @@ import os
 
 import pytest
 
+from real_time_crypto_market_data_pipeline_spark.operators.normalize import normalize_frames
 from real_time_crypto_market_data_pipeline_spark.sources.okx_ws import (
     BackoffPolicy,
     subscribe_payload,
@@ -59,7 +60,7 @@ def test_backoff_exponential_capped_jittered():
 
 def test_replay_source_to_normalized_memory_sink(spark, replay_path, tmp_path):
     raw = P.read_raw_stream(spark, mode="replay", path=replay_path, batch_size=3)
-    events = P.normalized_stream(raw)
+    events = normalize_frames(raw)
     q = (
         events.writeStream.outputMode("append")
         .format("memory")
@@ -90,7 +91,7 @@ def test_replay_source_to_normalized_memory_sink(spark, replay_path, tmp_path):
 def test_streaming_staleness_state_across_batches(spark, replay_path, tmp_path):
     # batch_size=2 forces multiple microbatches -> state must persist
     raw = P.read_raw_stream(spark, mode="replay", path=replay_path, batch_size=2)
-    stale = streaming_staleness(P.normalized_stream(raw))
+    stale = streaming_staleness(normalize_frames(raw))
     q = (
         stale.writeStream.outputMode("append")
         .format("memory")
@@ -117,7 +118,7 @@ def test_streaming_staleness_state_across_batches(spark, replay_path, tmp_path):
 def test_windowed_latency_stats_stream(spark, replay_path, tmp_path):
     raw = P.read_raw_stream(spark, mode="replay", path=replay_path, batch_size=10)
     stats = P.windowed_latency_stats(
-        P.normalized_stream(raw), window="5 seconds", slide="5 seconds"
+        normalize_frames(raw), window="5 seconds", slide="5 seconds"
     )
     # complete mode: append would hold rows until the watermark passes
     # each window, which never happens when the replay file is finite
@@ -142,14 +143,16 @@ def test_windowed_latency_stats_stream(spark, replay_path, tmp_path):
 def test_full_pipeline_jsonl_layout_and_csv(spark, replay_path, tmp_path):
     """K3 layout + K5 csv through the composed pipeline (P2)."""
     work = str(tmp_path / "work")
-    handles = P.start_pipeline(spark, replay_path, work, enable_console=False)
+    handles = P.start_pipeline(
+        spark, path=replay_path, out_dir=work, csv_dir=f"{work}/metrics_csv"
+    )
     try:
         handles.process_all_available()
     finally:
         handles.stop()
     # Hive-style partition layout: exchange=okx/channel=../dt=../symbol=..
     found = []
-    for root, _dirs, files in os.walk(f"{work}/data"):
+    for root, _dirs, files in os.walk(f"{work}/events"):
         for f in files:
             if f.endswith(".txt"):
                 found.append(os.path.join(root, f))
@@ -172,29 +175,6 @@ def test_full_pipeline_jsonl_layout_and_csv(spark, replay_path, tmp_path):
         "lat_count", "lat_mean_ms", "lat_std_ms", "lat_min_ms", "lat_max_ms",
         "stale_count", "stale_mean_ms", "stale_std_ms", "stale_min_ms", "stale_max_ms",
     ]
-
-
-def test_streaming_exact_dedup(spark, tmp_path):
-    """X1 streaming: duplicate frames collapse within the watermark."""
-    from real_time_crypto_market_data_pipeline_spark.sources.okx_ws import write_replay_file
-
-    dup_frames = [FRAMES[0], FRAMES[0], FRAMES[1], FRAMES[0]]
-    path = write_replay_file(str(tmp_path / "dups.jsonl"), dup_frames)
-    raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=10)
-    deduped = P.streaming_exact_dedup(P.normalized_stream(raw))
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT ts_exchange_ms FROM dedup_out").collect()
-    finally:
-        q.stop()
-    assert sorted(r.ts_exchange_ms for r in rows) == [1000, 1600]
 
 
 def test_metrics_line_gate_and_format(spark, tmp_path):
@@ -227,7 +207,7 @@ def test_sink_error_isolation(spark, replay_path, tmp_path):
     from real_time_crypto_market_data_pipeline_spark.streaming import sinks as K
 
     raw = P.read_raw_stream(spark, mode="replay", path=replay_path, batch_size=10)
-    events = P.normalized_stream(raw)
+    events = normalize_frames(raw)
 
     def exploding_batch(df, epoch_id):
         raise RuntimeError("sink boom")
@@ -280,7 +260,7 @@ def test_watermark_drops_late_events(spark, tmp_path):
     write_replay_file(path, [frame(1_000), frame(100_000)])
     raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=10)
     agg = (
-        P.normalized_stream(raw)
+        normalize_frames(raw)
         .withColumn("event_time", F.timestamp_millis(F.col("ts_exchange_ms")))
         .withWatermark("event_time", "10 seconds")
         .groupBy(F.window("event_time", "5 seconds"))
@@ -326,7 +306,7 @@ def test_streaming_session_window(spark, tmp_path):
     )
     raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=10)
     agg = (
-        P.normalized_stream(raw)
+        normalize_frames(raw)
         .withColumn("event_time", F.timestamp_millis(F.col("ts_exchange_ms")))
         .withWatermark("event_time", "1 second")
         .groupBy("symbol", F.session_window("event_time", "5 seconds"))
@@ -373,7 +353,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
     ]
     path = write_replay_file(str(tmp_path / "ss.jsonl"), frames)
     raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=10)
-    joined = P.stream_stream_enrich(P.normalized_stream(raw))
+    joined = P.stream_stream_enrich(normalize_frames(raw))
     q = (
         joined.writeStream.outputMode("append")
         .format("memory")
@@ -395,7 +375,10 @@ def test_stream_stream_interval_join(spark, tmp_path):
 def test_observed_counters(spark, tmp_path):
     """Operational counters (decode_errors / control_frames) observed
     per microbatch with no extra pass - the predecessor-design
-    counters from the SURVEY archaeology."""
+    counters from the SURVEY archaeology. They outlive the idle
+    progress reports a drained query keeps emitting."""
+    import time
+
     from real_time_crypto_market_data_pipeline_spark.sources.okx_ws import write_replay_file
     from real_time_crypto_market_data_pipeline_spark.streaming.observability import (
         last_counters,
@@ -407,20 +390,34 @@ def test_observed_counters(spark, tmp_path):
     raw = observe_decode_health(
         P.read_raw_stream(spark, mode="replay", path=path, batch_size=10)
     )
-    events = P.normalized_stream(raw)
-    q = (
-        events.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("obs_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_obs"))
-        .start()
-    )
+    events = normalize_frames(raw)
+    idle_conf = "spark.sql.streaming.noDataProgressEventInterval"
+    prev = spark.conf.get(idle_conf, None)
+    spark.conf.set(idle_conf, "100ms")  # read once, at query start
+    try:
+        q = (
+            events.writeStream.outputMode("append")
+            .format("memory")
+            .queryName("obs_out")
+            .option("checkpointLocation", str(tmp_path / "ckpt_obs"))
+            .start()
+        )
+    finally:
+        if prev is None:
+            spark.conf.unset(idle_conf)
+        else:
+            spark.conf.set(idle_conf, prev)
     try:
         q.processAllAvailable()
+        deadline = time.monotonic() + 30
+        while q.lastProgress["numInputRows"] > 0 and time.monotonic() < deadline:
+            time.sleep(0.1)
+        assert q.lastProgress["numInputRows"] == 0  # an idle progress is last
         counters = last_counters(q)
     finally:
         q.stop()
     assert counters is not None
+    assert counters["batch_id"] == 0
     assert counters["frames_total"] == 5
     assert counters["decode_errors"] == 2  # garbage{{ and pong
     assert counters["control_frames"] == 1  # the subscribe frame
@@ -440,9 +437,7 @@ def test_compaction_preserves_rows(spark, replay_path, tmp_path):
     path = str(tmp_path / "grow.jsonl")
     write_replay_file(path, FRAMES[:2])
     work = str(tmp_path / "work")
-    handles = P.start_pipeline(
-        spark, path, work, enable_console=False, enable_csv=False
-    )
+    handles = P.start_pipeline(spark, path=path, out_dir=work)
     try:
         handles.process_all_available()
         write_replay_file(path, FRAMES)
@@ -451,12 +446,12 @@ def test_compaction_preserves_rows(spark, replay_path, tmp_path):
         handles.stop()
     before = sorted(
         ln
-        for r, _d, fs in os.walk(f"{work}/data")
+        for r, _d, fs in os.walk(f"{work}/events")
         for f in fs
         if f.endswith(".txt")
         for ln in open(os.path.join(r, f)).read().splitlines()
     )
-    n = compact_partitions(spark, f"{work}/data", f"{work}/compacted")
+    n = compact_partitions(spark, f"{work}/events", f"{work}/compacted")
     assert n >= 1
     after = sorted(
         ln
@@ -492,7 +487,7 @@ def test_jsonl_sink_count_bounded_flush(spark, tmp_path):
     raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=1000)
     out = str(tmp_path / "data")
     q = start_jsonl_sink(
-        P.normalized_stream(raw), out, str(tmp_path / "ckpt_cb"),
+        normalize_frames(raw), out, str(tmp_path / "ckpt_cb"),
         max_events_per_file=100,
     )
     try:
@@ -524,7 +519,7 @@ def test_exact_reference_file_layout(spark, tmp_path):
     raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=10)
     out = str(tmp_path / "data")
     q = start_exact_layout_jsonl_sink(
-        P.normalized_stream(raw), out, str(tmp_path / "ckpt_exact")
+        normalize_frames(raw), out, str(tmp_path / "ckpt_exact")
     )
     try:
         q.processAllAvailable()
@@ -542,86 +537,10 @@ def test_exact_reference_file_layout(spark, tmp_path):
     assert os.path.exists(t)
 
 
-def test_windowed_ohlc_candles(spark, tmp_path):
-    """Streaming OHLC: open/close pick the first/last trade by event
-    time inside each tumbling window; volume and vwap accumulate."""
-    def trade(sym, ts, px, sz):
-        return (
-            f'{{"arg": {{"channel": "trades", "instId": "{sym}"}},'
-            f' "data": [{{"ts": "{ts}", "px": "{px}", "sz": "{sz}",'
-            f' "side": "buy", "tradeId": "t{ts}"}}]}}'
-        )
-
-    from real_time_crypto_market_data_pipeline_spark.sources.okx_ws import write_replay_file
-
-    path = str(tmp_path / "ohlc.jsonl")
-    write_replay_file(
-        path,
-        [
-            trade("BTC-USDT", 1_000, 100.0, 1.0),   # open of window [0, 60s)
-            trade("BTC-USDT", 30_000, 90.0, 2.0),   # low
-            trade("BTC-USDT", 45_000, 110.0, 1.0),  # high
-            trade("BTC-USDT", 59_000, 105.0, 1.0),  # close
-        ],
-    )
-    raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=10)
-    bars = P.windowed_ohlc(P.normalized_stream(raw), window="1 minute")
-    q = (
-        bars.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("ohlc_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ohlc"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM ohlc_out").collect()
-    finally:
-        q.stop()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r.open, r.high, r.low, r.close) == (100.0, 110.0, 90.0, 105.0)
-    assert r.volume == 5.0
-    assert r.n_trades == 4
-    assert r.vwap == pytest.approx((100 + 90 * 2 + 110 + 105) / 5.0)
-
-
-def test_stream_static_enrichment(spark, replay_path, tmp_path):
-    """Stream-static broadcast join: every event picks up its dim row,
-    statelessly (no watermark required in append mode)."""
-    dim = spark.createDataFrame(
-        [("BTC-USDT", "BTC", 0.1), ("ETH-USDT", "ETH", 0.01)],
-        "symbol STRING, base_ccy STRING, tick_size DOUBLE",
-    )
-    raw = P.read_raw_stream(spark, mode="replay", path=replay_path, batch_size=10)
-    enriched = P.enrich_with_static(P.normalized_stream(raw), dim)
-    q = (
-        enriched.selectExpr("symbol", "base_ccy", "tick_size", "ts_exchange_ms")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("enrich_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_enrich"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM enrich_out").collect()
-    finally:
-        q.stop()
-    assert len(rows) > 0
-    by_sym = {r.symbol: r for r in rows}
-    assert by_sym["BTC-USDT"].base_ccy == "BTC"
-    assert by_sym["BTC-USDT"].tick_size == 0.1
-    assert by_sym["ETH-USDT"].base_ccy == "ETH"
-
-
 def test_exact_layout_epoch_replay_is_idempotent(spark, tmp_path):
     """A replayed foreachBatch epoch (crash after appends, before the
     checkpoint commit) must not duplicate lines; new epochs append."""
-    from real_time_crypto_market_data_pipeline_spark.operators.normalize import (
-        jsonl_encode,
-        normalize_frames,
-    )
+    from real_time_crypto_market_data_pipeline_spark.operators.normalize import jsonl_encode
     from real_time_crypto_market_data_pipeline_spark.streaming.sinks import (
         exact_layout_batch_writer,
     )
@@ -651,103 +570,6 @@ def test_exact_layout_epoch_replay_is_idempotent(spark, tmp_path):
     assert all_lines() == first
     write(lines, 1)  # new epoch: appends
     assert len(all_lines()) == 2 * len(first)
-
-
-def test_merge_upsert_batch_bucket_pruned_and_idempotent(spark, tmp_path):
-    """CDC apply to a bucketed parquet target: updates land, inserts
-    land, untouched bucket partitions' files are not rewritten, and
-    replaying a batch converges to the same state."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from real_time_crypto_market_data_pipeline_spark.streaming.sinks import (
-        merge_upsert_batch,
-    )
-
-    target = str(tmp_path / "dim")
-    b1 = spark.createDataFrame(
-        [(k, f"v{k}", 1) for k in range(20)], "k LONG, v STRING, seq LONG"
-    )
-    merge_upsert_batch(spark, b1, target, "k", "seq", num_buckets=8)
-    assert spark.read.parquet(target).count() == 20
-
-    # batch 2: update k=3 (two versions in-batch, seq 3 wins), insert k=100
-    b2 = spark.createDataFrame(
-        [(3, "stale", 2), (3, "fresh", 3), (100, "new", 2)],
-        "k LONG, v STRING, seq LONG",
-    )
-    touched = {
-        r.bucket
-        for r in spark.createDataFrame([(3,), (100,)], "k LONG")
-        .select(
-            F.pmod(F.xxhash64("k"), F.lit(8)).cast("int").alias("bucket")
-        )
-        .collect()
-    }
-    untouched_files = {}
-    for root, _d, fs in os.walk(target):
-        for f in fs:
-            if f.endswith(".parquet") and not any(
-                f"bucket={b}/" in os.path.join(root, f) + "/" or
-                os.path.basename(root) == f"bucket={b}" for b in touched
-            ):
-                p = os.path.join(root, f)
-                untouched_files[p] = os.path.getmtime(p)
-    assert untouched_files  # some buckets are not touched by batch 2
-    _time.sleep(0.05)
-    merge_upsert_batch(spark, b2, target, "k", "seq", num_buckets=8)
-    after = spark.read.parquet(target)
-    assert after.count() == 21
-    assert after.where("k = 3").first().v == "fresh"
-    assert after.where("k = 100").first().v == "new"
-    for p, mtime in untouched_files.items():
-        assert os.path.exists(p) and os.path.getmtime(p) == mtime, p
-    # replay batch 2: same state (idempotent by construction)
-    merge_upsert_batch(spark, b2, target, "k", "seq", num_buckets=8)
-    again = spark.read.parquet(target)
-    assert again.count() == 21
-    assert again.where("k = 3").first().v == "fresh"
-
-
-def test_streaming_merge_upsert_sink(spark, tmp_path):
-    """The foreachBatch MERGE sink applies a change stream to the
-    bucketed target end to end."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from real_time_crypto_market_data_pipeline_spark.streaming.sinks import (
-        start_merge_upsert_sink,
-    )
-
-    src_dir = str(tmp_path / "changes")
-    os.makedirs(src_dir)
-    schema = StructType(
-        [
-            StructField("k", LongType()),
-            StructField("v", StringType()),
-            StructField("seq", LongType()),
-        ]
-    )
-    spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 1)], schema
-    ).coalesce(1).write.mode("append").parquet(src_dir)
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    target = str(tmp_path / "dim2")
-    q = start_merge_upsert_sink(
-        stream, target, str(tmp_path / "ckpt_merge"), key_col="k", seq_col="seq",
-        num_buckets=4,
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.read.parquet(target).count() == 2
-        spark.createDataFrame([(2, "b2", 2), (3, "c", 2)], schema).coalesce(
-            1
-        ).write.mode("append").parquet(src_dir)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    final = {r.k: r.v for r in spark.read.parquet(target).collect()}
-    assert final == {1: "a", 2: "b2", 3: "c"}
 
 
 def test_streaming_rollup_sink_incremental_and_lossless(spark, tmp_path):
@@ -821,25 +643,23 @@ def test_streaming_rollup_sink_incremental_and_lossless(spark, tmp_path):
 
 def test_streaming_rollup_family_matches_batch_queries_sf001(spark, tmp_path):
     """Streaming/batch parity on real data: replay the sf0.01 events
-    table through BOTH continuous-aggregate sinks (sum-stats and OHLC)
-    in three time-ordered chunks, then the partials reads must equal
-    the registered batch queries q_rollup_merge / q_ohlc_rollup row
-    for row. Time-ordered chunking mirrors a live stream (each batch
-    touches a contiguous bucket range) and shares boundary hours
-    between chunks, so the existing-partition merge path executes."""
+    table through the continuous-aggregate sink in three time-ordered
+    chunks, then the partials read must equal the registered batch query
+    q_rollup_merge row for row. Time-ordered chunking mirrors a live
+    stream (each batch touches a contiguous bucket range) and shares
+    boundary hours between chunks, so the existing-partition merge path
+    executes."""
     from pyspark.sql import functions as F
 
     from real_time_crypto_market_data_pipeline_spark.plans import QUERIES
     from real_time_crypto_market_data_pipeline_spark.streaming.sinks import (
-        read_ohlc_rollup,
         read_rollup,
-        start_ohlc_sink,
         start_rollup_sink,
     )
     from real_time_crypto_market_data_pipeline_spark.tables import load_events
 
     sf = "/root/testdata/sf0.01"
-    ev = load_events(spark, sf).select("event_type", "value", "ms", "event_id")
+    ev = load_events(spark, sf).select("event_type", "value", "ms")
     lo, hi = ev.agg(F.min("ms"), F.max("ms")).first()
     cuts = [lo, lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3, hi + 1]
 
@@ -847,26 +667,18 @@ def test_streaming_rollup_family_matches_batch_queries_sf001(spark, tmp_path):
     os.makedirs(src)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     roll_target = str(tmp_path / "roll_partials")
-    ohlc_target = str(tmp_path / "ohlc_partials")
     q_roll = start_rollup_sink(
         stream, roll_target, str(tmp_path / "ckpt_roll"),
         keys=["event_type"], value_col="value", ts_ms_col="ms",
         grain_ms=3_600_000,
-    )
-    q_ohlc = start_ohlc_sink(
-        stream, ohlc_target, str(tmp_path / "ckpt_ohlc"),
-        keys=["event_type"], value_col="value", ts_ms_col="ms",
-        tiebreak_col="event_id", grain_ms=3_600_000,
     )
     try:
         for a, b in zip(cuts, cuts[1:]):
             chunk = ev.where((F.col("ms") >= a) & (F.col("ms") < b))
             chunk.coalesce(1).write.mode("append").parquet(src)
             q_roll.processAllAvailable()
-            q_ohlc.processAllAvailable()
     finally:
         q_roll.stop()
-        q_ohlc.stop()
 
     def rows(df):
         cols = sorted(df.columns)
@@ -875,10 +687,6 @@ def test_streaming_rollup_family_matches_batch_queries_sf001(spark, tmp_path):
     got_roll = rows(read_rollup(spark, roll_target, ["event_type"], coarse_factor=24))
     want_roll = rows(QUERIES["q_rollup_merge"](spark, sf))
     assert got_roll == want_roll  # integer partials: bit-identical
-
-    got_ohlc = rows(read_ohlc_rollup(spark, ohlc_target, ["event_type"], coarse_factor=24))
-    want_ohlc = rows(QUERIES["q_ohlc_rollup"](spark, sf))
-    assert got_ohlc == want_ohlc  # argmin/argmax structs: bit-identical
 
 
 def test_rollup_sink_checkpoint_reset_not_silently_dropped(spark, tmp_path):
@@ -1006,71 +814,6 @@ def test_rollup_sink_legacy_single_line_marker_still_skips_replay(spark, tmp_pat
     assert n == 1  # replay skipped; without the legacy path it double-counts
 
 
-def test_streaming_near_dedup_drops_signature_identical_docs(spark, tmp_path):
-    """Ingest-time near-dup suppression: a whitespace variant (same
-    shingle set, DIFFERENT raw text - exact dedup would keep it) is
-    dropped; distinct docs and short-text docs survive. Exercised as
-    a real stream through dropDuplicatesWithinWatermark."""
-    import datetime
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from real_time_crypto_market_data_pipeline_spark.streaming.pipeline import (
-        streaming_near_dedup,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("event_time", TimestampType()),
-        ]
-    )
-    t0 = datetime.datetime(2026, 1, 1, 0, 0, 0)
-    rows = [
-        (1, "alpha beta gamma delta epsilon", t0),
-        # same token sequence, doubled spaces: same shingles, new text
-        (2, "alpha  beta gamma  delta epsilon", t0),
-        (3, "a completely different document body here", t0),
-        (4, "short", t0),          # no shingles: exact-hash fallback
-        (5, "short", t0),          # exact duplicate of 4 -> dropped
-        (6, "shorter", t0),        # different short text -> kept
-    ]
-    src = str(tmp_path / "src")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-
-    out = (
-        streaming_near_dedup(
-            spark.readStream.schema(schema).parquet(src), watermark="1 minute"
-        )
-        .writeStream.format("memory")
-        .queryName("near_dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        out.processAllAvailable()
-    finally:
-        out.stop()
-
-    kept = {
-        r.doc_id for r in spark.sql("SELECT doc_id FROM near_dedup_out").collect()
-    }
-    # one of {1,2} survives (signature-identical), one of {4,5}
-    # (exact-identical); 3 and 6 always survive
-    assert len(kept & {1, 2}) == 1
-    assert len(kept & {4, 5}) == 1
-    assert {3, 6} <= kept
-    assert len(kept) == 4
-
-
 def test_streaming_temperature_mix_matches_batch(spark, tmp_path):
     """Ingest-time temperature mixing: the batch census broadcasts
     into a stateless stream-static join, and the streamed kept set is
@@ -1185,121 +928,6 @@ def test_streaming_realized_vol_matches_batch_query(spark, tmp_path):
         n_w, v_w = want[k]
         assert n_g == n_w
         assert abs(v_g - v_w) <= 1e-9 * max(1.0, abs(v_w))
-
-
-def test_streaming_drawdown_matches_batch_query(spark, tmp_path):
-    """Replay sf0.01 events through streaming_drawdown in three
-    time-ordered chunks; last emission per key == batch q_drawdown
-    (counts and peak bit-identical, drawdown to float tolerance)."""
-    from pyspark.sql import functions as F
-
-    from real_time_crypto_market_data_pipeline_spark.plans import QUERIES
-    from real_time_crypto_market_data_pipeline_spark.streaming.stateful import (
-        streaming_drawdown,
-    )
-    from real_time_crypto_market_data_pipeline_spark.tables import load_events
-
-    sf = "/root/testdata/sf0.01"
-    ev = load_events(spark, sf).select("user_id", "ms", "event_id", "value")
-    lo, hi = ev.agg(F.min("ms"), F.max("ms")).first()
-    cuts = [lo, lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3, hi + 1]
-
-    src = str(tmp_path / "replay")
-    os.makedirs(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = (
-        streaming_drawdown(stream)
-        .writeStream.format("memory")
-        .queryName("dd_parity")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        for a, b in zip(cuts, cuts[1:]):
-            chunk = ev.where((F.col("ms") >= a) & (F.col("ms") < b))
-            chunk.coalesce(1).write.mode("append").parquet(src)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-
-    emitted = spark.sql(
-        "SELECT user_id, n_obs, peak, max_drawdown FROM dd_parity"
-    ).toPandas()
-    last = emitted.sort_values("n_obs").groupby("user_id").tail(1)
-    got = {
-        int(r.user_id): (int(r.n_obs), float(r.peak), float(r.max_drawdown))
-        for r in last.itertuples()
-    }
-    want = {
-        int(r["user_id"]): (int(r["n_obs"]), float(r["peak"]), float(r["max_drawdown"]))
-        for r in QUERIES["q_drawdown"](spark, sf).collect()
-    }
-    assert set(got) == set(want)
-    for k, (n_g, p_g, d_g) in got.items():
-        n_w, p_w, d_w = want[k]
-        assert n_g == n_w and p_g == p_w
-        assert abs(d_g - d_w) <= 1e-12 * max(1.0, abs(d_w))
-
-
-def test_streaming_session_stats_matches_batch_query(spark, tmp_path):
-    """Replay sf0.01 events through streaming_session_stats in three
-    time-ordered chunks; the final session table must equal batch
-    q_session_stats exactly, keyed by (user_id, start_ms) - the
-    ordinal session_id is the only batch-side construct a stream
-    cannot reproduce (it requires numbering over total history)."""
-    from pyspark.sql import functions as F
-
-    from real_time_crypto_market_data_pipeline_spark.plans import QUERIES
-    from real_time_crypto_market_data_pipeline_spark.streaming.pipeline import (
-        streaming_session_stats,
-    )
-    from real_time_crypto_market_data_pipeline_spark.tables import load_events
-
-    sf = "/root/testdata/sf0.01"
-    ev = load_events(spark, sf).select("user_id", "ms", "value")
-    lo, hi = ev.agg(F.min("ms"), F.max("ms")).first()
-    cuts = [lo, lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3, hi + 1]
-
-    src = str(tmp_path / "replay")
-    os.makedirs(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    # complete mode: every trigger emits the whole session table, so
-    # the final snapshot includes sessions still open at end-of-stream
-    # (append mode would hold them back until the watermark passes)
-    q = (
-        streaming_session_stats(stream)
-        .writeStream.format("memory")
-        .queryName("sess_stats_parity")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        for a, b in zip(cuts, cuts[1:]):
-            chunk = ev.where((F.col("ms") >= a) & (F.col("ms") < b))
-            chunk.coalesce(1).write.mode("append").parquet(src)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        (int(r.user_id), int(r.start_ms)): (
-            int(r.n_events), int(r.duration_ms), int(r.value_cents)
-        )
-        for r in spark.sql(
-            "SELECT user_id, n_events, start_ms, duration_ms, value_cents"
-            " FROM sess_stats_parity"
-        ).collect()
-    }
-    want = {
-        (int(r["user_id"]), int(r["start_ms"])): (
-            int(r["n_events"]), int(r["duration_ms"]), int(r["value_cents"])
-        )
-        for r in QUERIES["q_session_stats"](spark, sf).collect()
-    }
-    assert got == want
-    assert len(got) > 5  # the gap really splits: several sessions exist
 
 
 def test_streaming_realized_vol_repairs_within_batch_disorder(spark, tmp_path):
@@ -1521,231 +1149,3 @@ def test_streaming_realized_vol_state_survives_restart(spark, tmp_path):
         assert n_g == n_w
         assert abs(v_g - v_w) <= 1e-9 * max(1.0, abs(v_w))
 
-
-def test_streaming_funnel_matches_batch_query(spark, tmp_path):
-    """Replay sf0.01 events through streaming_funnel in three
-    time-ordered chunks; the most-advanced emission per user must
-    equal batch q_funnel exactly (stage timestamps only fill in,
-    never move, so the max-stage row IS the final state)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from real_time_crypto_market_data_pipeline_spark.plans import QUERIES
-    from real_time_crypto_market_data_pipeline_spark.streaming.stateful import (
-        streaming_funnel,
-    )
-    from real_time_crypto_market_data_pipeline_spark.tables import load_events
-
-    sf = "/root/testdata/sf0.01"
-    ev = load_events(spark, sf).select("user_id", "ms", "event_id", "event_type")
-    lo, hi = ev.agg(F.min("ms"), F.max("ms")).first()
-    cuts = [lo, lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3, hi + 1]
-
-    src = str(tmp_path / "replay")
-    os.makedirs(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = (
-        streaming_funnel(stream)
-        .writeStream.format("memory")
-        .queryName("funnel_parity")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        for a, b in zip(cuts, cuts[1:]):
-            chunk = ev.where((F.col("ms") >= a) & (F.col("ms") < b))
-            chunk.coalesce(1).write.mode("append").parquet(src)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-
-    emitted = spark.sql("SELECT * FROM funnel_parity").toPandas()
-    last = emitted.sort_values("stages_reached").groupby("user_id").tail(1)
-    got = {
-        int(r.user_id): (
-            int(r.t_view),
-            None if pd.isna(r.t_click) else int(r.t_click),
-            None if pd.isna(r.t_purchase) else int(r.t_purchase),
-            int(r.stages_reached),
-        )
-        for r in last.itertuples()
-    }
-    want = {
-        int(r["user_id"]): (
-            int(r["t_view"]),
-            None if r["t_click"] is None else int(r["t_click"]),
-            None if r["t_purchase"] is None else int(r["t_purchase"]),
-            int(r["stages_reached"]),
-        )
-        for r in QUERIES["q_funnel"](spark, sf).collect()
-    }
-    assert got == want
-    assert len(got) > 10 and {s for *_, s in got.values()} <= {1, 2, 3}
-
-
-def test_streaming_retention_cohort_matches_batch_query(spark, tmp_path):
-    """Replay sf0.01 events through streaming_retention_cohort in three
-    time-ordered chunks; the increments are append-exactly-once per
-    (user, week), so counting them per (cohort_week, week_offset)
-    must reproduce the batch retention matrix exactly."""
-    from pyspark.sql import functions as F
-
-    from real_time_crypto_market_data_pipeline_spark.plans import QUERIES
-    from real_time_crypto_market_data_pipeline_spark.streaming.stateful import (
-        streaming_retention_cohort,
-    )
-    from real_time_crypto_market_data_pipeline_spark.tables import load_events
-
-    sf = "/root/testdata/sf0.01"
-    ev = load_events(spark, sf).select("user_id", "ms")
-    lo, hi = ev.agg(F.min("ms"), F.max("ms")).first()
-    cuts = [lo, lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3, hi + 1]
-
-    src = str(tmp_path / "replay")
-    os.makedirs(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = (
-        streaming_retention_cohort(stream)
-        .writeStream.format("memory")
-        .queryName("retention_parity")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        for a, b in zip(cuts, cuts[1:]):
-            chunk = ev.where((F.col("ms") >= a) & (F.col("ms") < b))
-            chunk.coalesce(1).write.mode("append").parquet(src)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        (int(r.cohort_week), int(r.week_offset)): int(r.n_users)
-        for r in spark.sql(
-            "SELECT cohort_week, week_offset, COUNT(*) AS n_users"
-            " FROM retention_parity GROUP BY cohort_week, week_offset"
-        ).collect()
-    }
-    want = {
-        (int(r["cohort_week"]), int(r["week_offset"])): int(r["n_users"])
-        for r in QUERIES["q_retention_cohort"](spark, sf).collect()
-    }
-    assert got == want
-    assert len(got) > 3  # several cohort/offset combinations exist
-
-
-def test_streaming_funnel_repairs_within_batch_disorder(spark, tmp_path):
-    """Pin the funnel twin's ordering contract: rows scrambled WITHIN
-    each microbatch are repaired by the (ms, stage-rank, event_id)
-    sort - including the same-ms case where a click at its user's
-    first view's ms must still qualify (stage-rank orders views
-    first). Batch parity must hold exactly under in-chunk scrambling."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from real_time_crypto_market_data_pipeline_spark.plans import QUERIES
-    from real_time_crypto_market_data_pipeline_spark.streaming.stateful import (
-        streaming_funnel,
-    )
-    from real_time_crypto_market_data_pipeline_spark.tables import load_events
-
-    sf = "/root/testdata/sf0.01"
-    ev = load_events(spark, sf).select("user_id", "ms", "event_id", "event_type")
-    lo, hi = ev.agg(F.min("ms"), F.max("ms")).first()
-    cuts = [lo, lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3, hi + 1]
-
-    src = str(tmp_path / "replay")
-    os.makedirs(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = (
-        streaming_funnel(stream)
-        .writeStream.format("memory")
-        .queryName("funnel_disorder")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        for a, b in zip(cuts, cuts[1:]):
-            chunk = (
-                ev.where((F.col("ms") >= a) & (F.col("ms") < b))
-                .orderBy(F.md5(F.col("event_id").cast("string")))
-            )
-            chunk.coalesce(1).write.mode("append").parquet(src)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-
-    emitted = spark.sql("SELECT * FROM funnel_disorder").toPandas()
-    last = emitted.sort_values("stages_reached").groupby("user_id").tail(1)
-    got = {
-        int(r.user_id): (
-            int(r.t_view),
-            None if pd.isna(r.t_click) else int(r.t_click),
-            None if pd.isna(r.t_purchase) else int(r.t_purchase),
-        )
-        for r in last.itertuples()
-    }
-    want = {
-        int(r["user_id"]): (
-            int(r["t_view"]),
-            None if r["t_click"] is None else int(r["t_click"]),
-            None if r["t_purchase"] is None else int(r["t_purchase"]),
-        )
-        for r in QUERIES["q_funnel"](spark, sf).collect()
-    }
-    assert got == want
-
-
-def test_streaming_retention_cross_batch_disorder_mislabels_cohort(spark, tmp_path):
-    """The retention twin's documented caveat is real: chunks replayed
-    in REVERSED time order make a user's first-PROCESSED week a later
-    week than their true minimum, so at least one cohort label must
-    diverge from the batch matrix - proving the parity test's
-    time-ordered replay is load-bearing, not doc hedging."""
-    from pyspark.sql import functions as F
-
-    from real_time_crypto_market_data_pipeline_spark.plans import QUERIES
-    from real_time_crypto_market_data_pipeline_spark.streaming.stateful import (
-        streaming_retention_cohort,
-    )
-    from real_time_crypto_market_data_pipeline_spark.tables import load_events
-
-    sf = "/root/testdata/sf0.01"
-    ev = load_events(spark, sf).select("user_id", "ms")
-    lo, hi = ev.agg(F.min("ms"), F.max("ms")).first()
-    cuts = [lo, lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3, hi + 1]
-
-    src = str(tmp_path / "replay")
-    os.makedirs(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = (
-        streaming_retention_cohort(stream)
-        .writeStream.format("memory")
-        .queryName("retention_disorder")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        for a, b in reversed(list(zip(cuts, cuts[1:]))):  # latest chunk first
-            chunk = ev.where((F.col("ms") >= a) & (F.col("ms") < b))
-            chunk.coalesce(1).write.mode("append").parquet(src)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        (int(r.cohort_week), int(r.week_offset)): int(r.n_users)
-        for r in spark.sql(
-            "SELECT cohort_week, week_offset, COUNT(*) AS n_users"
-            " FROM retention_disorder GROUP BY cohort_week, week_offset"
-        ).collect()
-    }
-    want = {
-        (int(r["cohort_week"]), int(r["week_offset"])): int(r["n_users"])
-        for r in QUERIES["q_retention_cohort"](spark, sf).collect()
-    }
-    assert got != want  # the caveat is a real failure mode

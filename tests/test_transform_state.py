@@ -1,15 +1,12 @@
-"""Stateful EWMA quote tracker and event-time idle flush.
-
-The executable-everywhere versions live in streaming/stateful.py
-(applyInPandasWithState); the Spark-4 transformWithStateInPandas
-versions in streaming/transform_state.py need google.protobuf at
-runtime and are exercised only where it exists (last block).
+"""Stateful EWMA quote tracker and event-time idle flush
+(streaming/stateful.py, applyInPandasWithState).
 """
 
 from __future__ import annotations
 
 import pytest
 
+from real_time_crypto_market_data_pipeline_spark.operators.normalize import normalize_frames
 from real_time_crypto_market_data_pipeline_spark.sources.okx_ws import write_replay_file
 from real_time_crypto_market_data_pipeline_spark.streaming import pipeline as P
 from real_time_crypto_market_data_pipeline_spark.streaming.stateful import (
@@ -33,7 +30,7 @@ def test_quote_ewma_state_survives_batches(spark, tmp_path):
     batch1 = [book_frame("BTC-USDT", 1000 * (i + 1), 10.0, 11.0) for i in range(6)]
     write_replay_file(path, batch1)
     raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=100)
-    out = streaming_quote_ewma(P.normalized_stream(raw), alpha=0.5, k=3.0)
+    out = streaming_quote_ewma(normalize_frames(raw), alpha=0.5, k=3.0)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
@@ -74,7 +71,7 @@ def test_idle_flush_fires_on_event_time_gap(spark, tmp_path):
     write_replay_file(path, btc)
     raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=100)
     out = streaming_idle_flush(
-        P.normalized_stream(raw), gap_ms=5_000, watermark="1 second"
+        normalize_frames(raw), gap_ms=5_000, watermark="1 second"
     )
     q = (
         out.writeStream.outputMode("append")
@@ -109,48 +106,6 @@ def test_idle_flush_fires_on_event_time_gap(spark, tmp_path):
     assert "ETH-USDT" not in flushed
 
 
-# ---- transformWithStateInPandas versions (need protobuf) -----------------
-
-
-def test_tws_quote_ewma(spark, tmp_path):
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState protocol needs protobuf"
-    )
-    from real_time_crypto_market_data_pipeline_spark.streaming.transform_state import (
-        rocksdb_conf,
-        streaming_quote_ewma as tws_quote_ewma,
-    )
-
-    prev = {}
-    for key, val in rocksdb_conf().items():
-        prev[key] = spark.conf.get(key, None)
-        spark.conf.set(key, val)
-    path = str(tmp_path / "tws.jsonl")
-    write_replay_file(
-        path, [book_frame("BTC-USDT", 1000 * (i + 1), 10.0, 11.0) for i in range(3)]
-    )
-    raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=100)
-    out = tws_quote_ewma(P.normalized_stream(raw), alpha=0.5)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("tws_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM tws_out").collect()
-    finally:
-        q.stop()
-        for key, val in prev.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
-    assert len(rows) == 3
-
-
 def test_ewma_state_survives_query_restart(spark, tmp_path):
     """GroupState is restored from the checkpointed state store on a
     full query restart (new query object, same checkpoint): the first
@@ -164,7 +119,7 @@ def test_ewma_state_survives_query_restart(spark, tmp_path):
 
     def start():
         raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=100)
-        out = streaming_quote_ewma(P.normalized_stream(raw), alpha=0.5, k=3.0)
+        out = streaming_quote_ewma(normalize_frames(raw), alpha=0.5, k=3.0)
         return (
             out.writeStream.outputMode("append")
             .format("json")
