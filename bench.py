@@ -28,12 +28,17 @@ from real_time_crypto_market_data_pipeline_spark.plans import (
     BENCH_KEYS,
     QUERIES,
 )
-from real_time_crypto_market_data_pipeline_spark.session import get_spark
+from real_time_crypto_market_data_pipeline_spark.session import get_spark, query_scope
 
 
-def run_to_completion(df) -> int:
-    df.write.mode("overwrite").format("noop").save()
-    return 0
+def run_to_completion(build) -> float:
+    """Seconds to build one query and write it to the noop sink in its own
+    ``query_scope``: its pinned tables release after the clock stops, so
+    no later run plan-matches onto its cached blocks."""
+    with query_scope():
+        t0 = time.perf_counter()
+        build().write.mode("overwrite").format("noop").save()
+        return time.perf_counter() - t0
 
 
 def load_snapshot() -> dict:
@@ -68,7 +73,7 @@ def main(keys=None, metric="headline_total", extra_keys=None) -> None:
     # warm every query at the smallest SF first: steady-state, not
     # first-call classloading + codegen compilation (~1-3 s/query)
     for name in [*keys, *extra_keys]:
-        run_to_completion(QUERIES[name](spark, warm_dir))
+        run_to_completion(lambda: QUERIES[name](spark, warm_dir))
 
     n_runs_env = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     load_start = load_snapshot()
@@ -81,17 +86,9 @@ def main(keys=None, metric="headline_total", extra_keys=None) -> None:
             spark.sparkContext.setJobDescription(f"bench:{name}")
             # one untimed run at the target SF: C2-compile the hot
             # loops on real data volume before the clock starts
-            spark.catalog.clearCache()
-            run_to_completion(QUERIES[name](spark, sf_dir))
-            samples = []
-            for _ in range(n_runs):
-                # r20 VERDICT: CacheManager plan-matched identical runs
-                # onto the previous run's persisted blocks, making
-                # min-of-N partially warm-cache. Outside the clock.
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                run_to_completion(QUERIES[name](spark, sf_dir))
-                samples.append(round(time.perf_counter() - t0, 3))
+            run_to_completion(lambda: QUERIES[name](spark, sf_dir))
+            samples = [round(run_to_completion(lambda: QUERIES[name](spark, sf_dir)), 3)
+                       for _ in range(n_runs)]
             timings[name] = min(samples)
             runs[name] = samples
         spark.sparkContext.setJobDescription(None)

@@ -20,11 +20,10 @@ faster JVM-side), dropping oracle parity - the topology is unchanged.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin, query_scope
 from .text import spread_for_fanout, tokens_col, word_shingles
 
 DEFAULT_NUM_HASHES = 8
@@ -202,20 +201,16 @@ def jaccard_pairs(
     expression on the single pre-shuffle input partition. Exchange
     count is not the cost model here; codegen coverage is. (The
     distinct output is also exchange-reused across both join sides.)
+    The shingle table is pinned into the caller's ``query_scope``.
     """
-    sh = (
-        spread_for_fanout(docs).select(
-            "doc_id",
-            F.explode(word_shingles(tokens_col(F.col(text_col)),
-                                    shingle_n)).alias("shingle"))
-        .distinct()
-        # materialize the distinct shingle table ONCE (lazily): sizes,
-        # the df census, and both join sides read it, and exchange
-        # reuse does not cover the post-prune branches - 5.6 -> 3.5 s
-        # at x10 (SCALING.md r15); ContextCleaner frees the blocks.
-        .localCheckpoint(eager=False))
-    ckpt = sh  # the checkpointed frame itself: the release lambda must
-    # target THIS plan's LogicalRDD - max_df rebinds sh to a Join below
+    # materialize the distinct shingle table ONCE (lazily): sizes, the
+    # df census, and both join sides read it, and exchange reuse does
+    # not cover the post-prune branches - 5.6 -> 3.5 s at x10 (SCALING.md r15)
+    sh = pin(spread_for_fanout(docs).select(
+        "doc_id",
+        F.explode(word_shingles(tokens_col(F.col(text_col)),
+                                shingle_n)).alias("shingle")).distinct(),
+        "checkpoint", eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     if max_df is not None:
         # df-pruning: a shingle appearing in >max_df docs contributes
@@ -245,14 +240,6 @@ def jaccard_pairs(
         jac = jac.where(F.col("jaccard") >= min_jaccard)
     if top_k is not None:
         jac = jac.orderBy(F.col("jaccard").desc(), "doc_a", "doc_b").limit(top_k)
-    # release handle (r16 ADVICE; r17: verified via getRDDStorageInfo that
-    # DataFrame.rdd.unpersist() is a NO-OP - it wraps a fresh javaToPython
-    # RDD, not the checkpoint - so the eager path unpersists the plan's
-    # LogicalRDD. ContextCleaner still frees on GC; after an eager release
-    # the table cannot be recomputed (truncated lineage): fails loud.
-    jac.shingle_table = sh
-    jac.release_shingles = (lambda: ckpt._jdf.queryExecution()
-                            .analyzed().rdd().unpersist(False))
     return jac
 
 
@@ -315,25 +302,18 @@ def lsh_jaccard_dedup(
     cost of two exchanges. The count() is one extra tiny job over the
     persisted pair list, not a recompute of the minhash agg.
 
-    r21: the distinct-shingle SETS compute once and persist for the
-    query's duration - minhash consumes them exploded (min over
-    distinct shingles is bit-identical) and both verify sides read them
-    directly, where the old form shingled the corpus THREE times
-    (guide §8 "materialize the proxy once"; A/B: OPTIMIZATION_r21.md).
-    ``.release_cache()`` frees both intra-query tables.
+    The distinct-shingle SETS compute once, pinned (like the candidates)
+    into the caller's ``query_scope``: minhash consumes them exploded (min
+    over distinct shingles is bit-identical) and both verify sides read
+    them directly (one shingle pass, not three: OPTIMIZATION_r21.md).
     """
-    sh_sets = _shingle_sets(docs, text_col, shingle_n).persist()
+    sh_sets = pin(_shingle_sets(docs, text_col, shingle_n))
     buckets = _band_explode(
         _minhash_agg(sh_sets.select("doc_id", F.explode("sh").alias("shingle")),
                      DEFAULT_NUM_HASHES),
         DEFAULT_NUM_HASHES, DEFAULT_BAND_ROWS)
-    cands = lsh_candidate_pairs(buckets).persist()
-    try:
-        n_cands = cands.count()
-    except Exception:
-        cands.unpersist()
-        sh_sets.unpersist()
-        raise
+    cands = pin(lsh_candidate_pairs(buckets))
+    n_cands = cands.count()
     # Verify WITHOUT exploding: each doc keeps its distinct-shingle SET
     # as one array row, the (small, LSH-bounded) candidate list
     # broadcasts onto it, and the exact intersection is array_intersect
@@ -351,7 +331,6 @@ def lsh_jaccard_dedup(
         paired.select("doc_a", "doc_b",
                       _jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
         .where(F.col("jaccard") >= min_jaccard))
-    out.release_cache = lambda: (cands.unpersist(), sh_sets.unpersist())
     return out
 
 
@@ -394,24 +373,18 @@ def lsh_index_build(
     measured 10 s/batch append wall at 45k docs while undersized
     fan-out just coarsens probe pruning. ``{index_dir}/meta`` records
     the build parameters."""
-    pairs = lsh_jaccard_dedup(docs, text_col, min_jaccard, shingle_n)
-    # persist: _lsh_rows consumes kept on TWO join branches, each of
-    # which would otherwise re-run the whole one-shot dedup lineage
-    kept = docs.join(pairs.select(F.col("doc_b").alias("doc_id")).distinct(),
-                     "doc_id", "left_anti").persist()
-    try:
+    with query_scope():  # every intra-build table lives for this call only
+        pairs = lsh_jaccard_dedup(docs, text_col, min_jaccard, shingle_n)
+        # persist: _lsh_rows consumes kept on TWO join branches, each of
+        # which would otherwise re-run the whole one-shot dedup lineage
+        kept = pin(docs.join(pairs.select(F.col("doc_b").alias("doc_id")).distinct(),
+                             "doc_id", "left_anti"))
         if num_buckets is None:  # ~2k band rows per bucket dir
             num_buckets = min(IDX_BUCKETS, max(8, kept.count() * (
                 DEFAULT_NUM_HASHES // DEFAULT_BAND_ROWS) // 2000))
-        rows = _lsh_rows(kept, text_col, shingle_n, num_buckets)
-        try:
-            rows.repartition("bkt").write.mode(
-                "overwrite").partitionBy("bkt").parquet(f"{index_dir}/kept")
-        finally:
-            rows.release_sets()
-    finally:
-        kept.unpersist()
-        pairs.release_cache()  # r21: free the dedup's intra-query tables
+        _lsh_rows(kept, text_col, shingle_n, num_buckets).repartition(
+            "bkt").write.mode("overwrite").partitionBy("bkt").parquet(
+            f"{index_dir}/kept")
     _write_meta(docs.sparkSession, index_dir, min_jaccard=float(min_jaccard),
                 shingle_n=shingle_n, num_buckets=num_buckets)
 
@@ -421,10 +394,10 @@ def _lsh_rows(docs: DataFrame, text_col: str, shingle_n: int,
     """Index-layout rows: (doc_id, band, bucket, sh, bkt) - band
     buckets joined with the doc's shingle set, bucket-dir key attached.
 
-    r21: ONE shingle pass - the persisted sets feed both legs (minhash
-    banding + the inline-sh join; the old form shingled twice). Callers
-    materialize promptly, then call ``.release_sets()``."""
-    sets = _shingle_sets(docs, text_col, shingle_n).persist()
+    ONE shingle pass: the sets, pinned into the caller's ``query_scope``,
+    feed both legs (minhash banding + the inline-sh join); callers
+    materialize the rows in a scope that closes right after."""
+    sets = pin(_shingle_sets(docs, text_col, shingle_n))
     buckets = _band_explode(
         _minhash_agg(sets.select("doc_id", F.explode("sh").alias("shingle")),
                      DEFAULT_NUM_HASHES),
@@ -432,7 +405,6 @@ def _lsh_rows(docs: DataFrame, text_col: str, shingle_n: int,
     out = buckets.join(sets, "doc_id").withColumns(
         {"doc_id": F.col("doc_id").cast("long"),
          "bkt": (F.crc32("bucket") % num_buckets).cast("int")})
-    out.release_sets = sets.unpersist
     return out
 
 
@@ -598,9 +570,8 @@ def lsh_dedup_incremental(
                                 {"min_jaccard": 0.5})["min_jaccard"]
     shingle_n, nb = int(meta["shingle_n"]), int(meta["num_buckets"])
     _heal_kept_swap(index_dir)  # a torn compaction swap repairs before the read
-    rows = _lsh_rows(batch, text_col, shingle_n, nb)
-    bt = rows.localCheckpoint()  # materialized: the sets release right away
-    rows.release_sets()
+    with query_scope():  # materialized: the sets release right away
+        bt = pin(_lsh_rows(batch, text_col, shingle_n, nb), "checkpoint", outer=True)
     # probed dirs: bounded by min(num_buckets, |batch| x bands)
     bkts = sorted(r[0] for r in bt.select("bkt").distinct().collect())
     seen = spark.read.schema(  # fixed layout: no footer read at planning
@@ -619,9 +590,9 @@ def lsh_dedup_incremental(
         .join(bt.select("band", "bucket", "doc_id", "sh"), ["band", "bucket"])
         .where((F.col("doc_a") < F.col("doc_id")) & (_jaccard(
             F.col("sh_a"), F.col("sh")) >= min_jaccard)).select("doc_id"))
-    admitted = batch.select("doc_id").join(  # shingle-less docs admit too
+    admitted = pin(batch.select("doc_id").join(  # shingle-less docs admit too
         hit_seen.unionByName(hit_batch).distinct(),
-        "doc_id", "left_anti").localCheckpoint()
+        "doc_id", "left_anti"), "checkpoint")
     if update_index:  # advance the seen-set: append survivors' rows
         bt.join(admitted, "doc_id", "left_semi").repartition("bkt").write.mode(
             "append").partitionBy("bkt").parquet(f"{index_dir}/kept")
@@ -657,10 +628,10 @@ def lsh_index_member(batch: DataFrame, index_dir: str,
     if lsh_rows is not None:
         ids = lsh_rows.select("doc_id", "bkt")  # shared pass: already pinned
     else:  # r17 ADVICE: recompute pins the NARROW (doc_id, bkt) form -
-        rows = _lsh_rows(batch, text_col, int(meta["shingle_n"]),
-                         int(meta["num_buckets"]))  # - never the wide sets
-        ids = rows.select("doc_id", "bkt").localCheckpoint()
-        rows.release_sets()
+        with query_scope():  # - never the wide sets
+            ids = pin(_lsh_rows(batch, text_col, int(meta["shingle_n"]),
+                                int(meta["num_buckets"])).select("doc_id", "bkt"),
+                      "checkpoint", outer=True)
     bkts = sorted(r[0] for r in ids.select("bkt").distinct().collect())
     kept_ids = spark.read.schema(
         "doc_id long, band int, bucket string, sh array<string>, bkt int"
@@ -669,22 +640,6 @@ def lsh_index_member(batch: DataFrame, index_dir: str,
     return batch.select("doc_id").join(
         kept_ids, "doc_id", "left_semi").unionByName(
         batch.select("doc_id").join(ids, "doc_id", "left_anti"))
-
-
-def _ensure_checkpoint_dir(df: DataFrame, checkpoint_dir: str) -> None:
-    """Set the session-global checkpoint dir only if none is configured
-    yet; setCheckpointDir only affects FUTURE checkpoints, but another
-    operator may still be writing under the current dir, so an explicit
-    request that differs gets a warning instead of a silent override."""
-    sc = df.sparkSession.sparkContext
-    current = sc.getCheckpointDir()
-    if current is None:
-        sc.setCheckpointDir(checkpoint_dir)
-    elif current.rstrip("/") != checkpoint_dir.rstrip("/"):
-        warnings.warn(
-            f"checkpoint dir already set to {current}; keeping it over "
-            f"requested {checkpoint_dir} (set it before the first "
-            "checkpointing operator to take effect)", stacklevel=3)
 
 
 def connected_components(
@@ -703,49 +658,45 @@ def connected_components(
     Checkpoint tradeoff: default ``localCheckpoint`` pins label blocks
     to executors (no extra I/O, but one executor loss kills the run -
     fine locally); on a cluster pass ``checkpoint_dir`` for reliable
-    HDFS/S3 checkpoints. At 100 TB always set it.
+    HDFS/S3 checkpoints. At 100 TB always set it. The label rounds pin
+    into the caller's ``query_scope``; the edges live for this call only
+    (labels are checkpointed: their lineage no longer needs the edges).
 
     Returns (doc_id, component) with component = min doc_id reachable.
     """
-    if checkpoint_dir is not None:
-        _ensure_checkpoint_dir(pairs, checkpoint_dir)
-
-    def _persist_round(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .cache()
-    )
-    labels = _persist_round(
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("component", F.col("doc_id"))
-    )
-    for _ in range(max_iterations):
-        # own label plus every neighbor's label; the own-label rows also
-        # CARRY the previous component (r21), so convergence reads off
-        # the checkpointed round - no per-round new-vs-old label re-join.
-        neighbor_labels = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .select(F.col("src").alias("doc_id"), F.col("component"),
-                    F.lit(None).cast(labels.schema["component"].dataType)
-                    .alias("_old")))
-        new_labels = _persist_round(
-            labels.select("doc_id", "component",
-                          F.col("component").alias("_old"))
-            .unionByName(neighbor_labels)
-            .groupBy("doc_id")
-            .agg(F.min("component").alias("component"),
-                 F.min("_old").alias("_old"))  # exactly one non-null per doc
+    with query_scope():
+        edges = pin(
+            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+            .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+            .distinct()
         )
-        changed = (new_labels.where(F.col("component") != F.col("_old"))
-                   .limit(1).count())  # checkpoint scan: no join, no shuffle
-        labels = new_labels.select("doc_id", "component")
-        if changed == 0:
-            break
-    edges.unpersist()  # labels are checkpointed: lineage no longer needs edges
+        labels = pin(
+            edges.select(F.col("src").alias("doc_id"))
+            .distinct()
+            .withColumn("component", F.col("doc_id")),
+            "checkpoint", checkpoint_dir=checkpoint_dir, outer=True)
+        for _ in range(max_iterations):
+            # own label plus every neighbor's label; the own-label rows also
+            # CARRY the previous component (r21), so convergence reads off
+            # the checkpointed round - no per-round new-vs-old label re-join.
+            neighbor_labels = (
+                edges.join(labels, edges.dst == labels.doc_id)
+                .select(F.col("src").alias("doc_id"), F.col("component"),
+                        F.lit(None).cast(labels.schema["component"].dataType)
+                        .alias("_old")))
+            new_labels = pin(
+                labels.select("doc_id", "component",
+                              F.col("component").alias("_old"))
+                .unionByName(neighbor_labels)
+                .groupBy("doc_id")
+                .agg(F.min("component").alias("component"),
+                     F.min("_old").alias("_old")),  # exactly one non-null per doc
+                "checkpoint", checkpoint_dir=checkpoint_dir, outer=True)
+            changed = (new_labels.where(F.col("component") != F.col("_old"))
+                       .limit(1).count())  # checkpoint scan: no join, no shuffle
+            labels = new_labels.select("doc_id", "component")
+            if changed == 0:
+                break
     return labels
 
 
@@ -867,22 +818,20 @@ def semantic_dedup(
     pinned), so the assignment has ONE consumer and streams straight
     into the cell shuffle; pass ``checkpoint_dir`` on a cluster for
     reliable materialization. Threshold is corpus-calibrated: random
-    vectors top out ~0.49 within-cell, text ~0.95+.
+    vectors top out ~0.49 within-cell, text ~0.95+. The checkpoint and
+    any assign broadcast pin into the caller's ``query_scope``.
     """
     import numpy as np
 
-    from .similarity import _q8_mat, carry_broadcast, check_cap, ivf_assign
+    from .similarity import _q8_mat, check_cap, ivf_assign
 
     max_cell = check_cap(max_cell)
     wire = transport == "int8" or codes_col is not None
-    assign = ivf_assign(embeddings, num_cells, id_col=id_col, vec_col=vec_col,
-                        keep_vec=True, transport=transport,
-                        codes_col=codes_col, amax_col=amax_col)
+    e = ivf_assign(embeddings, num_cells, id_col=id_col, vec_col=vec_col,
+                   keep_vec=True, transport=transport,
+                   codes_col=codes_col, amax_col=amax_col)
     if checkpoint_dir is not None:
-        _ensure_checkpoint_dir(assign, checkpoint_dir)
-        e = assign.checkpoint()
-    else:
-        e = assign
+        e = pin(e, "checkpoint", checkpoint_dir=checkpoint_dir)
 
     def keep_in_cell(pdf):
         pdf = pdf.sort_values(id_col, ignore_index=True)
@@ -893,9 +842,8 @@ def semantic_dedup(
         dropped = _dropped_tri(V, Vn, pdf[id_col].to_numpy(), threshold, max_cell)
         return pdf.loc[~dropped, [id_col, "cell_id"]]
 
-    kept = e.groupBy("cell_id").applyInPandas(
+    return e.groupBy("cell_id").applyInPandas(
         keep_in_cell, schema=f"{id_col} long, cell_id int")
-    return carry_broadcast(kept, assign)
 
 
 def _write_meta(spark, index_dir: str, **params) -> None:
@@ -960,28 +908,26 @@ def semantic_index_build(
     seed fails the build, not the first probe. Returns num_cells."""
     from .similarity import sq8_encode
 
-    codes = sq8_encode(embeddings, id_col, vec_col).localCheckpoint()
-    if num_cells is None:
-        n = codes.count()
-        num_cells = max(1, min(max(8, n // 250), n))
-    cents = codes.where(F.col(id_col) < num_cells)
-    if cents.select(id_col).distinct().count() != num_cells:
-        raise ValueError(
-            f"seed ids must be dense from 0: need {num_cells} distinct "
-            f"centroid rows with {id_col} < {num_cells}")
-    kept = semantic_dedup(codes, num_cells, threshold, id_col=id_col,
-                          codes_col="__q8", max_cell=max_cell)
-    cents.select(
-        F.col(id_col).cast("long").alias("cell_id"), "__q8", "__amax"
-    ).write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    codes.join(kept, id_col).select(
-        F.col(id_col).cast("long").alias(id_col), "cell_id", "__q8", "__amax",
-        (F.col("cell_id") % IDX_BUCKETS).alias("bkt"),
-    ).repartition("bkt").write.mode(  # one file per bucket dir, not tasks x dirs
-        "overwrite").partitionBy("bkt").parquet(f"{index_dir}/kept")
-    bv = getattr(kept, "assign_broadcast", None)
-    if bv is not None:  # the index is written; drop the executor copies
-        bv.unpersist()
+    with query_scope():  # codes + assign broadcast live for this call only
+        codes = pin(sq8_encode(embeddings, id_col, vec_col), "checkpoint")
+        if num_cells is None:
+            n = codes.count()
+            num_cells = max(1, min(max(8, n // 250), n))
+        cents = codes.where(F.col(id_col) < num_cells)
+        if cents.select(id_col).distinct().count() != num_cells:
+            raise ValueError(
+                f"seed ids must be dense from 0: need {num_cells} distinct "
+                f"centroid rows with {id_col} < {num_cells}")
+        kept = semantic_dedup(codes, num_cells, threshold, id_col=id_col,
+                              codes_col="__q8", max_cell=max_cell)
+        cents.select(
+            F.col(id_col).cast("long").alias("cell_id"), "__q8", "__amax"
+        ).write.mode("overwrite").parquet(f"{index_dir}/centroids")
+        codes.join(kept, id_col).select(
+            F.col(id_col).cast("long").alias(id_col), "cell_id", "__q8", "__amax",
+            (F.col("cell_id") % IDX_BUCKETS).alias("bkt"),
+        ).repartition("bkt").write.mode(  # one file per bucket dir, not tasks x dirs
+            "overwrite").partitionBy("bkt").parquet(f"{index_dir}/kept")
     _write_meta(embeddings.sparkSession, index_dir, threshold=threshold,
                 num_cells=num_cells, id_col=id_col)
     return num_cells
@@ -1034,13 +980,9 @@ def semantic_dedup_incremental(
     codes = (batch.select(id_col, F.col(codes_col).alias("__q8"),
                           F.col(amax_col).alias("__amax"))
              if codes_col is not None else sq8_encode(batch, id_col, vec_col))
-    assigned = assign_cells(codes, cents, num_cells, id_col=id_col,
-                            keep_vec=True, codes_col="__q8")
-    if checkpoint_dir is not None:  # reliable multi-use materialization
-        _ensure_checkpoint_dir(assigned, checkpoint_dir)
-        assigned = assigned.checkpoint()
-    else:
-        assigned = assigned.localCheckpoint()
+    assigned = pin(assign_cells(codes, cents, num_cells, id_col=id_col,
+                                keep_vec=True, codes_col="__q8"),
+                   "checkpoint", checkpoint_dir=checkpoint_dir)
     # probed cells: bounded by min(C, |batch|) - an index-scale collect
     cells = sorted(r[0] for r in assigned.select("cell_id").distinct().collect())
     kept = spark.read.schema(  # fixed layout: no footer read at planning
@@ -1070,8 +1012,8 @@ def semantic_dedup_incremental(
         return pdf.loc[~dropped & (pdf["__seen"].to_numpy() == 0),
                        [id_col, "cell_id"]]
 
-    admitted = both.groupBy("cell_id").applyInPandas(
-        keep_new_in_cell, schema=f"{id_col} long, cell_id int").localCheckpoint()
+    admitted = pin(both.groupBy("cell_id").applyInPandas(
+        keep_new_in_cell, schema=f"{id_col} long, cell_id int"), "checkpoint")
     if update_index:  # advance the seen-set: append survivors' codes
         assigned.join(admitted, id_col, "left_semi").select(
             id_col, "cell_id", "__q8", "__amax",
@@ -1116,8 +1058,8 @@ def semantic_index_member(batch: DataFrame, index_dir: str,
                               F.col(amax_col).alias("__amax"))  # r17 ADVICE:
                  # amax_col threads like codes_col (was a '__amax' hardcode)
                  if codes_col is not None else sq8_encode(batch, id_col, vec_col))
-        assigned = assign_cells(codes, cents, num_cells, id_col=id_col,
-                                codes_col="__q8").localCheckpoint()
+        assigned = pin(assign_cells(codes, cents, num_cells, id_col=id_col,
+                                    codes_col="__q8"), "checkpoint")
     cells = sorted(r[0] for r in assigned.select("cell_id").distinct().collect())
     kept_ids = spark.read.schema(  # fixed layout: no footer read at planning
         f"{id_col} long, cell_id int, __q8 binary, __amax double, bkt int"

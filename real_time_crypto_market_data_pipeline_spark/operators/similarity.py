@@ -19,6 +19,8 @@ import numbers
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin, query_scope
+
 
 def check_cap(max_cell):
     """ValueError on bool / non-integral / non-positive ``max_cell`` (the
@@ -198,32 +200,6 @@ def _sq8_quant_np(V):
     return np.floor(V * 127.0 / a[:, None] + 0.5).astype(np.int8), amax
 
 
-def carry_broadcast(dst: DataFrame, src: DataFrame) -> DataFrame:
-    """Re-attach ``src.assign_broadcast`` (the post-crossover release
-    handle, a plain Python attribute LOST on any derived frame) to
-    ``dst`` so callers that wrap ``assign_cells`` keep an unpersist path."""
-    bv = getattr(src, "assign_broadcast", None)
-    if bv is not None:
-        dst.assign_broadcast = bv
-    return dst
-
-
-def _collect_release(out: DataFrame, handle: DataFrame) -> DataFrame:
-    """Materialize a k-row (BOUNDED by design) probe result, release
-    ``handle``'s persisted corpus blocks AND its post-crossover assign
-    broadcast (if one rode along), and hand back the rows as a local
-    DataFrame: all probe-call storage lives exactly one call, never
-    accumulating corpus-sized executor state across a session."""
-    try:
-        rows = out.collect()
-    finally:  # a mid-run probe failure must not leak the corpus blocks
-        handle.unpersist()
-        bv = getattr(handle, "assign_broadcast", None)
-        if bv is not None:
-            bv.unpersist()
-    return out.sparkSession.createDataFrame(rows, out.schema)
-
-
 def sq8_encode(
     embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
@@ -274,9 +250,8 @@ def assign_cells(
     once driver-side and ships in the task closure, or past
     ``broadcast_threshold_bytes`` (128 MB, SCALING.md's C~2.5e5
     closure-reserialization crossover) as ONE torrent-shipped
-    ``SparkContext.broadcast`` per executor, exposed on the result as
-    ``.assign_broadcast`` - the caller's ``unpersist()`` handle, valid
-    only AFTER materialization.
+    ``SparkContext.broadcast`` per executor, pinned into the caller's
+    ``query_scope`` (released when that scope closes).
 
     ``transport="int8"``: vectors SQ8-quantize IN THE WORKER (numpy;
     the JVM-HOF ``sq8_wire`` form measured 17x slower at 2M, SCALING.md
@@ -326,7 +301,7 @@ def assign_cells(
     depth = len(sizes)
     payload, bv = (ids, C, Cn, _routing_tree(C, Cn, sizes)), None
     if C.nbytes > broadcast_threshold_bytes:
-        bv = embeddings.sparkSession.sparkContext.broadcast(payload)
+        bv = pin(payload, "broadcast")
         payload = None  # closure must NOT also capture the index
 
     def assign(batches):
@@ -357,10 +332,7 @@ def assign_cells(
     src = embeddings.select(id_col, vec_col) if codes_col is None else (
         embeddings.select(id_col, F.col(codes_col).alias("__q8"),
                           F.col(amax_col).alias("__amax")))
-    out = src.mapInPandas(assign, schema=f"{id_col} LONG, cell_id INT" + keep_ddl)
-    if bv is not None:  # release handle: unpersist() after materializing
-        out.assign_broadcast = bv
-    return out
+    return src.mapInPandas(assign, schema=f"{id_col} LONG, cell_id INT" + keep_ddl)
 
 
 def ring_tiles(ids, V, Vn, k: int):
@@ -403,13 +375,9 @@ def split_hot_cells(
 
     max_cell = check_cap(max_cell)
     vec_ddl = assigned.schema[vec_col].dataType.simpleString()
-    if checkpoint_dir is not None:  # reliable, survives executor loss
-        from .dedup import _ensure_checkpoint_dir
-
-        _ensure_checkpoint_dir(assigned, checkpoint_dir)
-        e = assigned.checkpoint()
-    else:  # executor-pinned blocks (the connected_components policy knob)
-        e = assigned.localCheckpoint()
+    # reliable with checkpoint_dir (survives executor loss), else
+    # executor-pinned blocks (the connected_components policy knob)
+    e = pin(assigned, "checkpoint", checkpoint_dir=checkpoint_dir)
     sizes = e.groupBy("cell_id").count().where(F.col("count") > max_cell).collect()
     if not sizes:
         return e
@@ -471,7 +439,7 @@ def ivf_assign(
                        codes_col=codes_col, amax_col=amax_col)
     if max_cell is not None:  # r9: cap cell sizes (needs vectors to re-route)
         split = split_hot_cells(out, num_cells, max_cell, id_col, vec_col, checkpoint_dir)
-        return carry_broadcast(split if keep_vec else split.drop(vec_col), out)
+        return split if keep_vec else split.drop(vec_col)
     return out
 
 
@@ -494,31 +462,26 @@ def ivf_topk(
     wire end-to-end - routing on raw codes, scoring on the dequantized
     values (one Arrow-batched matmul; the float column never exists), so a
     codes-resident corpus (the 100 TB layout) needs no float copy. NOTE the
-    codes path executes EAGERLY (``_collect_release``): the k-row result
-    returns as a local frame and errors surface at call time, unlike the
-    lazy float path. ``n_probe`` (r15) widens the float-path probe to
+    codes path executes EAGERLY in its own ``query_scope``: the k-row
+    result returns as a local frame and errors surface at call time,
+    unlike the lazy float path. ``n_probe`` (r15) widens the float-path probe to
     the n most-query-similar CENTROIDS' cells (ties -> lowest cell_id,
     the flat ``ivf_kmeans_probe_cells`` rule) instead of the query's
     own assigned cell - the knob ``ann_recall`` measures.
     """
     if n_probe is not None and (codes_col is not None or max_cell is not None):
         raise ValueError("n_probe probes quantizer CELLS: float path, no ring split")
-    e = ivf_assign(embeddings, num_cells, id_col, vec_col, keep_vec=True,
-                   max_cell=max_cell, checkpoint_dir=checkpoint_dir,
-                   codes_col=codes_col, amax_col=amax_col)
     if codes_col is not None:
-        # persist the assignment ONCE (query lookup + probe scan would
-        # otherwise each run the full assign pass), then RELEASE it when
-        # the k-row result materializes - repeated probes in one session
-        # must not accumulate corpus-sized executor storage (r14)
-        e = e.persist()
-        r = e.where(F.col(id_col) == query_vec_id).first()
-        if r is None:  # absent query id: empty result, like the float path
-            return _collect_release(e.sparkSession.createDataFrame(
-                [], f"{id_col} long, cell_id int, cosine double"), e)
-        return _collect_release(_codes_query_topk(
-            e.where(F.col("cell_id") == r["cell_id"]), _deq_row(r), k,
-            id_col), e)
+        # persist the assignment ONCE (lookup + probe scan would each run the
+        # assign pass); the scope frees it on return, never accumulating (r14)
+        with query_scope():
+            return _codes_probe(pin(ivf_assign(
+                embeddings, num_cells, id_col, vec_col, keep_vec=True,
+                max_cell=max_cell, checkpoint_dir=checkpoint_dir,
+                codes_col=codes_col, amax_col=amax_col)), query_vec_id, k, id_col,
+                lambda r, q: F.col("cell_id") == r["cell_id"])
+    e = ivf_assign(embeddings, num_cells, id_col, vec_col, keep_vec=True,
+                   max_cell=max_cell, checkpoint_dir=checkpoint_dir)
     qrow = e.where(F.col(id_col) == query_vec_id).select(
         F.col("cell_id").alias("_qcell"),
         F.col(vec_col).alias("_qvec"),
@@ -566,10 +529,19 @@ def ivf_recall_sweep(
     persisted table, the centroid ranking collects once at the widest
     width (ties -> lowest id, the flat probe rule), and each width only
     varies the probe filter over its ranking prefix. The result is
-    len(n_probes) rows; collecting it releases the persisted corpus
-    blocks (``_collect_release``, the codes-probe discipline)."""
-    e = ivf_assign(embeddings, num_cells, id_col, vec_col,
-                   keep_vec=True).persist()
+    len(n_probes) rows, collected in the call's own ``query_scope`` so
+    the persisted corpus blocks release on return (the codes-probe
+    discipline)."""
+    with query_scope():
+        out = _recall_sweep(embeddings, query_vec_id, k, num_cells, n_probes,
+                            id_col, vec_col)
+        return out.sparkSession.createDataFrame(out.collect(), out.schema)
+
+
+def _recall_sweep(embeddings, query_vec_id, k, num_cells, n_probes,
+                  id_col="vec_id", vec_col="embedding") -> DataFrame:
+    """``ivf_recall_sweep``'s lazy plan (assignment pinned in the caller's scope)."""
+    e = pin(ivf_assign(embeddings, num_cells, id_col, vec_col, keep_vec=True))
     q = _query_row(embeddings, query_vec_id, id_col, vec_col)
     exact = _broadcast_query_topk(e, q, k, id_col, vec_col)
     ranked = _broadcast_query_topk(
@@ -583,7 +555,7 @@ def ivf_recall_sweep(
             pred=F.col("cell_id").isin(cells[:n_probe])), k, id_col).select(
             F.lit(int(n_probe)).cast("int").alias("n_probe"), "recall")
         out = leg if out is None else out.unionByName(leg)
-    return _collect_release(out.orderBy("n_probe"), e)
+    return out.orderBy("n_probe")
 
 
 def _deq_row(r):
@@ -592,6 +564,19 @@ def _deq_row(r):
 
     return np.frombuffer(r["__q8"], np.int8).astype(
         np.float64) * r["__amax"] / 127.0
+
+
+def _codes_probe(assigned, query_vec_id, k: int, id_col: str, cells) -> DataFrame:
+    """Codes-wire probe over a pinned assignment: score the rows ``cells(r, q)``
+    selects for query row ``r`` (dequantized: ``q``); return the k rows as a
+    LOCAL frame, so the caller's ``query_scope`` can release on return."""
+    r = assigned.where(F.col(id_col) == query_vec_id).first()
+    if r is None:  # absent query id: empty result, like the float path
+        return assigned.sparkSession.createDataFrame(
+            [], f"{id_col} long, cell_id int, cosine double")
+    q = _deq_row(r)
+    out = _codes_query_topk(assigned.where(cells(r, q)), q, k, id_col)
+    return out.sparkSession.createDataFrame(out.collect(), out.schema)
 
 
 def _codes_query_topk(e, q, k: int, id_col: str) -> DataFrame:
@@ -631,17 +616,21 @@ def _lloyd_kmeans(X, k: int, seed: int, max_iter: int = 20):
     jobs to distribute O(cap*k*dim) flops numpy does in ms; the
     stable-hash sample (<= 51 MB) bounds the collect at ANY corpus
     size. Empty clusters keep their center; any fixed codebook
-    satisfies the full-probe = brute-force invariant."""
+    satisfies the full-probe = brute-force invariant. An empty sample
+    raises ValueError."""
     import numpy as np
 
     n = X.shape[0]
+    if n == 0:
+        raise ValueError("k-means training sample is empty")
     rng = np.random.default_rng(seed)
     centers = np.empty((k, X.shape[1]), dtype=np.float64)
     centers[0] = X[int(rng.integers(n))]
     d2 = ((X - centers[0]) ** 2).sum(axis=1)
     for i in range(1, k):
         tot = float(d2.sum())
-        idx = int(rng.choice(n, p=d2 / tot)) if tot > 0 else int(rng.integers(n))
+        p = d2 / tot if tot > 0 else None  # renormalized: choice wants sum 1
+        idx = int(rng.choice(n, p=p / p.sum())) if tot > 0 else int(rng.integers(n))
         centers[i] = X[idx]
         d2 = np.minimum(d2, ((X - centers[i]) ** 2).sum(axis=1))
     for _ in range(max_iter):
@@ -750,23 +739,19 @@ def ivf_kmeans_topk(
     guarded on every normalization (cosine 0, not NaN). ``codes_col``
     (r13): the trained-index probe rides the codes wire end-to-end
     (see ``ivf_kmeans_index``); scoring dequantizes per Arrow batch,
-    and the path executes EAGERLY (``_collect_release``) - a local
+    and the path executes EAGERLY in its own ``query_scope`` - a local
     k-row frame, errors at call time, unlike the lazy float path.
     """
-    model, assigned = ivf_kmeans_index(
-        embeddings, num_cells, seed, id_col, vec_col, training_cap,
-        codes_col=codes_col, amax_col=amax_col)
     if codes_col is not None:
-        assigned = assigned.persist()  # query + probe: ONE pass, released
-        r = assigned.where(F.col(id_col) == query_vec_id).first()  # below
-        if r is None:  # absent query id: empty, like the float path
-            return _collect_release(assigned.sparkSession.createDataFrame(
-                [], f"{id_col} long, cosine double"), assigned)
-        qvec = _deq_row(r)
-        probe = ivf_kmeans_probe_cells(model, qvec, n_probe)
-        return _collect_release(_codes_query_topk(
-            assigned.where(F.col("cell_id").isin(probe)), qvec, k,
-            id_col).select(id_col, "cosine"), assigned)
+        with query_scope():  # query + probe: ONE pass, released on return
+            model, assigned = ivf_kmeans_index(
+                embeddings, num_cells, seed, id_col, vec_col, training_cap,
+                codes_col=codes_col, amax_col=amax_col)
+            return _codes_probe(
+                pin(assigned), query_vec_id, k, id_col, lambda r, q: F.col("cell_id").isin(
+                    ivf_kmeans_probe_cells(model, q, n_probe))).select(id_col, "cosine")
+    model, assigned = ivf_kmeans_index(
+        embeddings, num_cells, seed, id_col, vec_col, training_cap)
     r = embeddings.where(F.col(id_col) == query_vec_id).select(vec_col).first()
     if r is None:  # absent query id: empty, like the codes path (r13)
         return embeddings.sparkSession.createDataFrame(

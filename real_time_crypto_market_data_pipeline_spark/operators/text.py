@@ -14,6 +14,7 @@ here has an exact cross-engine oracle.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -48,7 +49,11 @@ def spread_for_fanout(
     # gate was rejected: size estimates cannot see a CALLER's existing
     # repartition, so it would stack the second exchange test_plans
     # pins against. Already-wide inputs reuse this QueryExecution.
-    if df._jdf.queryExecution().toRdd().getNumPartitions() >= target:
+    try:
+        width = df._jdf.queryExecution().toRdd().getNumPartitions()
+    except (Py4JError, AttributeError):  # private API gone: the public width
+        width = df.rdd.getNumPartitions()
+    if width >= target:
         return df
     if min_bytes > 0:
         try:

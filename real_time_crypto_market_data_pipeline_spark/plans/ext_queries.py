@@ -651,6 +651,10 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# q_ann_recall's sweep arguments (tools/explain_dump.py dumps its lazy plan)
+ANN_RECALL_SWEEP = dict(query_vec_id=0, k=10, num_cells=8, n_probes=(1, 2, 4))
+
+
 @query(
     "q_ann_recall",
     oracle=_ivf_best("SELECT 8 AS c")
@@ -686,9 +690,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-pinned instead: monotone in n_probe, 1.0 at full probe.
     r16: the sweep rides ONE persisted ``ivf_assign`` shared by ground
     truth, centroid ranking, and every width (``ivf_recall_sweep``)."""
-    return S.ivf_recall_sweep(
-        load(spark, sf_dir, "embeddings"), query_vec_id=0, k=10,
-        num_cells=8, n_probes=(1, 2, 4))
+    return S.ivf_recall_sweep(load(spark, sf_dir, "embeddings"), **ANN_RECALL_SWEEP)
 
 
 # ---------------------------------------------------------------- X4 (token stats)

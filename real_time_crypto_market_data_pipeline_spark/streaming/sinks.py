@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.normalize import jsonl_encode, render_stdout_line
+from ..session import pin, query_scope
 
 CSV_COLUMNS = [
     "generated_at_utc", "symbol", "channel",
@@ -31,6 +32,14 @@ CSV_COLUMNS = [
     "stale_count", "stale_mean_ms", "stale_std_ms", "stale_min_ms",
     "stale_max_ms",
 ]
+
+
+def _foreach_batch_query(df: DataFrame, write_batch, checkpoint: str,
+                         trigger_seconds: float) -> StreamingQuery:
+    """Start ``write_batch`` as a checkpointed foreachBatch append query."""
+    return (df.writeStream.outputMode("append").foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(processingTime=f"{trigger_seconds} seconds").start())
 
 
 def start_console_sink(
@@ -141,13 +150,7 @@ def start_csv_snapshot_sink(
             .csv(out_dir)
         )
 
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _foreach_batch_query(events, write_batch, checkpoint, trigger_seconds)
 
 
 def stop_all(queries: list[StreamingQuery]) -> None:
@@ -247,6 +250,32 @@ def compact_partitions(
     return compacted
 
 
+def _epoch_applied(marker: str, checkpoint: str | None, epoch_id: int) -> bool:
+    """True iff the ``_last_epoch`` marker says this epoch already landed.
+    Epoch ids restart at 0 under a fresh checkpoint: a marker bound to
+    another checkpoint is ignored. A bare-epoch marker (the exact-layout
+    sink's, ``checkpoint=None``, and the rollup's legacy format) counts as
+    the current checkpoint's, keeping its replay protection."""
+    try:
+        with open(marker, encoding="utf-8") as f:
+            stored_ckpt, _, stored_epoch = f.read().rpartition("\n")
+        return (stored_ckpt or checkpoint) == checkpoint and epoch_id <= int(stored_epoch)
+    except (FileNotFoundError, ValueError):
+        return False
+
+
+def _commit_epoch(marker: str, checkpoint: str | None, epoch_id: int) -> None:
+    """Record ``epoch_id`` as applied (bare when ``checkpoint`` is None) via
+    a temp file renamed over the marker: a crash leaves the old or the new."""
+    import os
+
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    tmp = marker + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write(str(epoch_id) if checkpoint is None else f"{checkpoint}\n{epoch_id}")
+    os.replace(tmp, marker)
+
+
 def exact_layout_batch_writer(out_dir: str):
     """The foreachBatch body of :func:`start_exact_layout_jsonl_sink`,
     exposed for direct testing of its epoch-replay idempotence.
@@ -266,12 +295,8 @@ def exact_layout_batch_writer(out_dir: str):
     marker = os.path.join(out_dir, "_last_epoch")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        try:
-            with open(marker, encoding="utf-8") as f:
-                if epoch_id <= int(f.read().strip()):
-                    return  # already fully appended; replayed epoch
-        except (FileNotFoundError, ValueError):
-            pass
+        if _epoch_applied(marker, None, epoch_id):
+            return  # already fully appended; replayed epoch
         by_path: dict[str, list[str]] = {}
         for r in batch_df.collect():
             path = os.path.join(
@@ -282,11 +307,7 @@ def exact_layout_batch_writer(out_dir: str):
             os.makedirs(os.path.dirname(path), exist_ok=True)
             with open(path, "a", encoding="utf-8") as f:
                 f.write("\n".join(batch_lines) + "\n")
-        os.makedirs(out_dir, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(str(epoch_id))
-        os.replace(tmp, marker)
+        _commit_epoch(marker, None, epoch_id)
 
     return write_batch
 
@@ -318,14 +339,8 @@ def start_exact_layout_jsonl_sink(
     the reference's appends give) - true exactly-once needs the
     Hive-layout file sink, whose per-epoch files commit atomically.
     """
-    lines = jsonl_encode(events)
-    return (
-        lines.writeStream.outputMode("append")
-        .foreachBatch(exact_layout_batch_writer(out_dir))
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _foreach_batch_query(jsonl_encode(events), exact_layout_batch_writer(out_dir),
+                                checkpoint, trigger_seconds)
 
 
 def rollup_merge_batch(
@@ -379,7 +394,7 @@ def rollup_merge_batch(
             )
         )
     # the write overwrites partitions the plan also reads; cut lineage
-    merged = merged.localCheckpoint()
+    merged = pin(merged, "checkpoint")
     (
         merged.repartition("bucket")
         .write.mode("overwrite")
@@ -407,21 +422,15 @@ def start_rollup_sink(
     ``read_rollup`` without ever rescanning raw events.
 
     Additive merge is not naturally idempotent, so replayed epochs are skipped
-    via a ``_last_epoch`` marker renamed into place only after the merge
-    landed (same recovery discipline as the exact-layout JSONL sink; on
-    Delta/Iceberg the marker becomes the transaction log). Epoch ids restart
-    at 0 under a fresh checkpoint, so the marker stores its checkpoint path
-    and is ignored on mismatch - relocating the checkpoint must not silently
-    drop every new batch.
+    via a checkpoint-bound ``_last_epoch`` marker renamed into place only
+    after the merge landed (``_epoch_applied``; on Delta/Iceberg the marker
+    becomes the transaction log).
 
     OPERATIONAL CONTRACT: a checkpoint reset makes the fresh stream replay its
     source from the beginning, and this sink will merge everything it replays
     into whatever partials already exist - resetting ONLY the checkpoint
     double-counts history into the stored aggregates. Pair every checkpoint
-    reset with clearing (or re-deriving) the partials dir. Markers written by
-    the pre-binding format (a bare epoch number with no checkpoint line) are
-    treated as belonging to the current checkpoint, preserving their replay
-    protection across the format upgrade instead of silently discarding it.
+    reset with clearing (or re-deriving) the partials dir.
     """
     import os
 
@@ -430,35 +439,14 @@ def start_rollup_sink(
     marker = os.path.join(target_dir, "_last_epoch")
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        try:
-            with open(marker, encoding="utf-8") as f:
-                content = f.read()
-            if "\n" in content:
-                stored_ckpt, stored_epoch = content.split("\n", 1)
-            else:
-                # legacy single-line marker (pre checkpoint-binding):
-                # attribute it to the current checkpoint so the last
-                # merged epoch keeps its replay protection
-                stored_ckpt, stored_epoch = checkpoint, content
-            if stored_ckpt == checkpoint and epoch_id <= int(stored_epoch):
-                return
-        except (FileNotFoundError, ValueError):
-            pass
-        bp = rollup_partials(batch_df, keys, value_col, ts_ms_col, grain_ms, scale=scale)
-        rollup_merge_batch(batch_df.sparkSession, bp, target_dir, keys)
-        os.makedirs(target_dir, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(f"{checkpoint}\n{epoch_id}")
-        os.replace(tmp, marker)
+        if _epoch_applied(marker, checkpoint, epoch_id):
+            return
+        with query_scope():
+            bp = rollup_partials(batch_df, keys, value_col, ts_ms_col, grain_ms, scale=scale)
+            rollup_merge_batch(batch_df.sparkSession, bp, target_dir, keys)
+        _commit_epoch(marker, checkpoint, epoch_id)
 
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _foreach_batch_query(events, apply, checkpoint, trigger_seconds)
 
 
 def read_rollup(
@@ -511,25 +499,18 @@ def lsh_dedup_batch_writer(index_dir: str, admitted_dir: str, checkpoint: str,
     marker = os.path.join(index_dir, "_last_epoch")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        applied, rows = False, None
-        try:
-            with open(marker, encoding="utf-8") as f:
-                stored_ckpt, stored_epoch = f.read().split("\n", 1)
-            applied = stored_ckpt == checkpoint and epoch_id <= int(stored_epoch)
-        except (FileNotFoundError, ValueError):
-            pass
-        if not applied:  # advance the seen-set exactly once per epoch
-            rows = lsh_dedup_incremental(
-                batch_df, index_dir, text_col=text_col,
-                compact_files_per_bucket=compact_files_per_bucket,
-                compact_buckets_per_firing=compact_buckets_per_firing,
-                compact_bytes_per_firing=compact_bytes_per_firing).lsh_rows
-            tmp = marker + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as f:
-                f.write(f"{checkpoint}\n{epoch_id}")
-            os.replace(tmp, marker)
-        lsh_index_member(batch_df, index_dir, text_col, lsh_rows=rows).write.mode(
-            "overwrite").parquet(os.path.join(admitted_dir, f"epoch={epoch_id}"))
+        with query_scope():  # the epoch's pinned tables release on return
+            rows = None
+            if not _epoch_applied(marker, checkpoint, epoch_id):
+                # advance the seen-set exactly once per epoch
+                rows = lsh_dedup_incremental(
+                    batch_df, index_dir, text_col=text_col,
+                    compact_files_per_bucket=compact_files_per_bucket,
+                    compact_buckets_per_firing=compact_buckets_per_firing,
+                    compact_bytes_per_firing=compact_bytes_per_firing).lsh_rows
+                _commit_epoch(marker, checkpoint, epoch_id)
+            lsh_index_member(batch_df, index_dir, text_col, lsh_rows=rows).write.mode(
+                "overwrite").parquet(os.path.join(admitted_dir, f"epoch={epoch_id}"))
 
     return write_batch
 
@@ -548,14 +529,9 @@ def start_lsh_dedup_sink(
     replay idempotence are pytest-pinned. The ``compact_*`` knobs reach
     the probe verbatim (r19: firing cadence/slice/disable are tunable
     from the sink API, not only by bypassing it)."""
-    return (docs.writeStream.outputMode("append")
-            .foreachBatch(lsh_dedup_batch_writer(
-                index_dir, admitted_dir, checkpoint, text_col,
-                compact_files_per_bucket, compact_buckets_per_firing,
-                compact_bytes_per_firing))
-            .option("checkpointLocation", checkpoint)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start())
+    return _foreach_batch_query(docs, lsh_dedup_batch_writer(
+        index_dir, admitted_dir, checkpoint, text_col, compact_files_per_bucket,
+        compact_buckets_per_firing, compact_bytes_per_firing), checkpoint, trigger_seconds)
 
 
 def semantic_dedup_batch_writer(index_dir: str, admitted_dir: str,
@@ -584,28 +560,21 @@ def semantic_dedup_batch_writer(index_dir: str, admitted_dir: str,
     marker = os.path.join(index_dir, "_last_epoch")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        applied, assigned = False, None
-        try:
-            with open(marker, encoding="utf-8") as f:
-                stored_ckpt, stored_epoch = f.read().split("\n", 1)
-            applied = stored_ckpt == checkpoint and epoch_id <= int(stored_epoch)
-        except (FileNotFoundError, ValueError):
-            pass
-        if not applied:  # advance the seen-set exactly once per epoch
-            assigned = semantic_dedup_incremental(
-                batch_df, index_dir, vec_col=vec_col,
-                codes_col=codes_col, amax_col=amax_col,
-                compact_files_per_bucket=compact_files_per_bucket,
-                compact_buckets_per_firing=compact_buckets_per_firing,
-                compact_bytes_per_firing=compact_bytes_per_firing).assigned_cells
-            tmp = marker + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as f:
-                f.write(f"{checkpoint}\n{epoch_id}")
-            os.replace(tmp, marker)
-        semantic_index_member(
-            batch_df, index_dir, vec_col=vec_col, codes_col=codes_col,
-            amax_col=amax_col, assigned=assigned).write.mode(
-            "overwrite").parquet(os.path.join(admitted_dir, f"epoch={epoch_id}"))
+        with query_scope():  # the epoch's pinned tables release on return
+            assigned = None
+            if not _epoch_applied(marker, checkpoint, epoch_id):
+                # advance the seen-set exactly once per epoch
+                assigned = semantic_dedup_incremental(
+                    batch_df, index_dir, vec_col=vec_col,
+                    codes_col=codes_col, amax_col=amax_col,
+                    compact_files_per_bucket=compact_files_per_bucket,
+                    compact_buckets_per_firing=compact_buckets_per_firing,
+                    compact_bytes_per_firing=compact_bytes_per_firing).assigned_cells
+                _commit_epoch(marker, checkpoint, epoch_id)
+            semantic_index_member(
+                batch_df, index_dir, vec_col=vec_col, codes_col=codes_col,
+                amax_col=amax_col, assigned=assigned).write.mode(
+                "overwrite").parquet(os.path.join(admitted_dir, f"epoch={epoch_id}"))
 
     return write_batch
 
@@ -624,11 +593,7 @@ def start_semantic_dedup_sink(
     index; admitted ids land under ``{admitted_dir}/epoch=N/``. Parity,
     replay idempotence: pytest-pinned (the LSH twin's battery, mirrored).
     The ``compact_*`` knobs reach the probe verbatim (r19)."""
-    return (embs.writeStream.outputMode("append")
-            .foreachBatch(semantic_dedup_batch_writer(
-                index_dir, admitted_dir, checkpoint, vec_col, codes_col,
-                amax_col, compact_files_per_bucket,
-                compact_buckets_per_firing, compact_bytes_per_firing))
-            .option("checkpointLocation", checkpoint)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start())
+    return _foreach_batch_query(embs, semantic_dedup_batch_writer(
+        index_dir, admitted_dir, checkpoint, vec_col, codes_col, amax_col,
+        compact_files_per_bucket, compact_buckets_per_firing, compact_bytes_per_firing),
+        checkpoint, trigger_seconds)

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from real_time_crypto_market_data_pipeline_spark.operators import dedup as D
 from real_time_crypto_market_data_pipeline_spark.operators import text as T
+from real_time_crypto_market_data_pipeline_spark.session import pin, query_scope
 
 from tests import _reference_impls as R
 
@@ -303,24 +304,24 @@ def test_lsh_matches_exact_and_mllib(spark):
 def test_lsh_jaccard_shared_shingle_sets_and_release(spark):
     """r21: the distinct-shingle sets are computed ONCE and shared by
     minhash and both verify sides (the old form shingled the corpus
-    three times), and ``.release_cache()`` frees every block the query
-    persisted - no corpus-sized storage accumulates across calls."""
+    three times), and closing the query scope frees every block the
+    query persisted - no corpus-sized storage accumulates across calls."""
     from real_time_crypto_market_data_pipeline_spark.tables import load
 
     spark.catalog.clearCache()
     docs = load(spark, "/root/testdata/sf0.001", "documents")
-    out = D.lsh_jaccard_dedup(docs, min_jaccard=0.7)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # three readers of the one persisted set table: minhash's explode
-    # plus the two verify sides
-    assert plan.count("InMemoryTableScan") >= 3
-    assert out.count() > 0
     # CacheManager (DataFrame persists only - localCheckpoint blocks from
     # other tests in the shared session do not show here) holds the two
-    # intra-query tables until the release handle drops them
+    # intra-query tables until the scope closes
     cm = spark._jsparkSession.sharedState().cacheManager()
-    assert not cm.isEmpty()  # sets + candidates live
-    out.release_cache()
+    with query_scope():
+        out = D.lsh_jaccard_dedup(docs, min_jaccard=0.7)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        # three readers of the one persisted set table: minhash's explode
+        # plus the two verify sides
+        assert plan.count("InMemoryTableScan") >= 3
+        assert out.count() > 0
+        assert not cm.isEmpty()  # sets + candidates live
     assert cm.isEmpty()  # both released
 
 
@@ -437,8 +438,8 @@ def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
     restart-safe path) produces the identical labeling as the default
     localCheckpoint mode, and actually materializes checkpoint data
     under the session's effective directory (the checkpoint dir is
-    session-global and FIRST-SETTER-WINS - _ensure_checkpoint_dir warns
-    rather than overrides - so another checkpoint test running first
+    session-global and FIRST-SETTER-WINS - pin warns rather than
+    overrides - so another checkpoint test running first
     legitimately redirects this one; order-independent on purpose)."""
     import os
     from urllib.parse import urlparse
@@ -677,13 +678,15 @@ def test_semantic_dedup_int8_transport_matches_numpy_replay(spark):
     assert kept == expect and 0 < len(kept) < len(rows)
 
 
-def test_ensure_checkpoint_dir_first_setter_honored():
+def test_pin_checkpoint_dir_first_setter_honored():
     """r10 ADVICE: the order-independent integration test can't see the
     first-setter case once any earlier test set the session-global dir,
-    so pin _ensure_checkpoint_dir's contract directly: none set -> the
+    so pin the reliable-checkpoint contract directly: none set -> the
     REQUESTED dir is set (no warning); same dir re-requested -> no-op,
-    no warning; a DIFFERENT dir -> kept + loud warning, never silently
-    overridden (another operator may still be writing under it)."""
+    no warning, although Spark reports it with a uuid subdir appended (a
+    per-round reliable checkpoint re-requests it every round); a
+    DIFFERENT dir -> kept + loud warning, never silently overridden
+    (another operator may still be writing under it)."""
     import warnings as W
 
     class _SC:
@@ -693,24 +696,31 @@ def test_ensure_checkpoint_dir_first_setter_honored():
         def getCheckpointDir(self):
             return self.cur
 
-        def setCheckpointDir(self, d):
+        def setCheckpointDir(self, d):  # Spark's form: a qualified uuid subdir
             self.sets.append(d)
-            self.cur = d
+            self.cur = f"file:{d.rstrip('/')}/5d1c-uuid"
 
     class _DF:
         def __init__(self, sc):
             self.sparkSession = type("S", (), {"sparkContext": sc})()
 
+        def checkpoint(self, eager=True):
+            return self
+
+    def ckpt(d):
+        return pin(_DF(sc), "checkpoint", checkpoint_dir=d)
+
     sc = _SC(None)
     with W.catch_warnings():
         W.simplefilter("error")
-        D._ensure_checkpoint_dir(_DF(sc), "/ckpt/a")  # first setter wins
-        assert sc.sets == ["/ckpt/a"] and sc.cur == "/ckpt/a"
-        D._ensure_checkpoint_dir(_DF(sc), "/ckpt/a/")  # same dir: quiet no-op
+        ckpt("/ckpt/a")  # first setter wins
+        assert sc.sets == ["/ckpt/a"] and sc.cur == "file:/ckpt/a/5d1c-uuid"
+        ckpt("/ckpt/a/")  # same dir: quiet no-op
+        ckpt("/ckpt/a")
         assert sc.sets == ["/ckpt/a"]
-    with pytest.warns(UserWarning, match="already set to /ckpt/a"):
-        D._ensure_checkpoint_dir(_DF(sc), "/ckpt/b")
-    assert sc.cur == "/ckpt/a" and sc.sets == ["/ckpt/a"]  # kept, not overridden
+    with pytest.warns(UserWarning, match="already set to file:/ckpt/a/5d1c-uuid"):
+        ckpt("/ckpt/b")
+    assert sc.cur == "file:/ckpt/a/5d1c-uuid" and sc.sets == ["/ckpt/a"]  # kept
 
 
 def test_semantic_dedup_kept_direct_matches_anti_join_tail(spark):
@@ -1702,30 +1712,26 @@ def test_lsh_dedup_sink_single_lsh_pass_per_fresh_epoch(
             spark.read.parquet(f"{out}/epoch=0").collect()} == {11}
 
 
-def test_jaccard_pairs_shingle_table_release_handle(spark):
-    """r16 ADVICE (sharpened r17): the checkpointed distinct-shingle table
-    is exposed as jac.shingle_table, and jac.release_shingles() must
-    ACTUALLY drop its storage blocks - DataFrame.rdd.unpersist() is a
-    verified no-op (it unpersists a fresh javaToPython wrapper, not the
-    checkpoint), so the release goes through the plan's LogicalRDD. The
-    block-drop is asserted via getRDDStorageInfo on the specific RDD id.
-    Like assign_broadcast, the attribute lives on the RETURNED frame only -
-    derived frames lose it (carry_broadcast documents the pitfall)."""
+@pytest.mark.parametrize("max_df", [None, 4])
+def test_jaccard_pairs_scope_frees_shingle_blocks(spark, max_df):
+    """r16 ADVICE (sharpened r17): closing the query scope must ACTUALLY
+    drop the checkpointed distinct-shingle table's storage blocks -
+    DataFrame.rdd.unpersist() is a verified no-op (it unpersists a fresh
+    javaToPython wrapper, not the checkpoint), so the release goes
+    through the plan's LogicalRDD. max_df=4 rebinds the shingle frame to
+    a pruned JOIN plan (a Join has no LogicalRDD: the r17 release raised
+    Py4JError there); the release must still target the checkpointed
+    BASE frame. Asserted via getRDDStorageInfo on the blocks the query
+    added."""
     docs = _docs(spark, [(i, _ctext(i % 3)) for i in range(6)])
-    jac = D.jaccard_pairs(docs, top_k=5)
-    rows = jac.collect()
-    sh = jac.shingle_table
-    assert set(sh.columns) == {"doc_id", "shingle"}
-    rid = sh._jdf.queryExecution().analyzed().rdd().id()
     jsc = spark.sparkContext._jsc.sc()
-    assert any(i.id() == rid for i in jsc.getRDDStorageInfo())  # cached
-    jac.release_shingles()  # the eager-release path
-    assert all(i.id() != rid for i in jsc.getRDDStorageInfo())  # freed
+    before = {i.id() for i in jsc.getRDDStorageInfo()}
+    with query_scope():
+        rows = D.jaccard_pairs(docs, top_k=5, max_df=max_df).collect()
+        added = {i.id() for i in jsc.getRDDStorageInfo()} - before
+        assert added  # the shingle table's checkpoint blocks
+    assert not added & {i.id() for i in jsc.getRDDStorageInfo()}  # freed
     assert len(rows) > 0  # the materialized result survives the release
-    # use-after-release either re-reads retained shuffle outputs (correct
-    # data) or raises checkpoint-block-not-found - never silently wrong;
-    # which one depends on shuffle-file retention, so neither is pinned
-    assert not hasattr(jac.limit(3), "shingle_table")  # derived frame loses it
 
 
 def test_incremental_probes_and_sink_accept_empty_batches(spark, tmp_path):
@@ -1941,22 +1947,6 @@ def test_semantic_dedup_sink_single_assign_pass_per_fresh_epoch(
     assert len(calls) == 2
     assert {r.vec_id for r in
             spark.read.parquet(f"{out}/epoch=0").collect()} == {21}
-
-
-def test_jaccard_pairs_release_handle_with_max_df(spark):
-    """r17 ADVICE (medium): with max_df= the shingle handle is rebound to
-    a pruned JOIN plan before the release lambda is built - the release
-    must target the checkpointed BASE frame (a Join has no LogicalRDD:
-    the old lambda raised Py4JError on df-capped runs). Asserts the
-    release still actually frees a storage block on the pruned path."""
-    docs = _docs(spark, [(i, _ctext(i % 3)) for i in range(6)])
-    jac = D.jaccard_pairs(docs, top_k=5, max_df=4)
-    rows = jac.collect()
-    jsc = spark.sparkContext._jsc.sc()
-    cached = {i.id() for i in jsc.getRDDStorageInfo()}
-    jac.release_shingles()  # raised Py4JError before the r18 fix
-    assert {i.id() for i in jsc.getRDDStorageInfo()} < cached  # block freed
-    assert len(rows) > 0  # the materialized result survives the release
 
 
 def test_semantic_sink_codes_wire_renamed_amax_col(spark, tmp_path):

@@ -541,6 +541,37 @@ def test_spread_for_fanout_size_gate(spark):
     assert spread_fired(spread_for_fanout(local.coalesce(1), min_bytes=8 << 20))
 
 
+def test_spread_for_fanout_private_reach_fallback(spark):
+    """r21 VERDICT #7: the physical-width probe reaches private API
+    (``_jdf.queryExecution()``); where that reach fails, the public
+    ``df.rdd`` width answers and the input is still spread correctly."""
+    from py4j.protocol import Py4JError
+
+    from real_time_crypto_market_data_pipeline_spark.operators.text import (
+        spread_for_fanout,
+    )
+
+    class _NoQueryExecution:
+        def __init__(self, jdf):
+            self._jdf, self.reached = jdf, 0
+
+        def queryExecution(self):  # noqa: N802 - the JVM method's casing
+            self.reached += 1
+            raise Py4JError("queryExecution unavailable")
+
+        def __getattr__(self, name):
+            return getattr(self._jdf, name)
+
+    docs = spark.createDataFrame(
+        [(i, f"t {i}") for i in range(40)], "doc_id LONG, text STRING").coalesce(1)
+    proxy = docs._jdf = _NoQueryExecution(docs._jdf)
+    out = spread_for_fanout(docs)
+    assert proxy.reached == 1  # the private reach was tried and failed
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert out.rdd.getNumPartitions() == target
+    assert sorted(r.doc_id for r in out.collect()) == list(range(40))
+
+
 def test_interval_join_bin_width_accepts_integral_rejects_bool(spark):
     """bin_width contract (r8 ADVICE): numpy integers (a COUNT result
     via pandas) are valid widths; bool and non-positive values raise

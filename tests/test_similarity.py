@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_time_crypto_market_data_pipeline_spark.operators import similarity as S
+from real_time_crypto_market_data_pipeline_spark.session import query_scope
 
 
 @pytest.fixture(scope="module")
@@ -574,19 +575,51 @@ def test_semdedup_codes_col_with_cap_fails_fast(spark):
         S.ivf_assign(S.sq8_encode(e), codes_col="__q8", max_cell=100)
 
 
-def test_assign_broadcast_release_handle(emb):
-    """r11 (VERDICT nit): past the broadcast crossover the returned
-    DataFrame carries the Broadcast as .assign_broadcast so callers can
-    unpersist() once materialized; the closure path exposes none."""
+@pytest.fixture
+def broadcasts(monkeypatch):
+    """(created, released) Broadcast logs for the test's duration."""
+    from pyspark import SparkContext
+    from pyspark.broadcast import Broadcast
+
+    created, released = [], []
+    real_new, real_unpersist = SparkContext.broadcast, Broadcast.unpersist
+
+    def new(self, value):
+        created.append(real_new(self, value))
+        return created[-1]
+
+    def unpersist(self, blocking=False):
+        released.append(self)
+        return real_unpersist(self, blocking)
+
+    monkeypatch.setattr(SparkContext, "broadcast", new)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    return created, released
+
+
+@pytest.fixture
+def forced_broadcast(monkeypatch):
+    """Every assign_cells call ships its index as a broadcast."""
+    real = S.assign_cells
+    monkeypatch.setattr(
+        S, "assign_cells",
+        lambda *a, **kw: real(*a, **{**kw, "broadcast_threshold_bytes": 0}))
+
+
+def test_assign_cells_broadcast_released_by_scope(emb, broadcasts):
+    """r11 (VERDICT nit): past the broadcast crossover the index ships as
+    ONE Broadcast pinned into the caller's query scope - live while the
+    result materializes, unpersisted when the scope closes; the closure
+    path creates none."""
+    created, released = broadcasts
     cents = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cvec"))
-    out = S.assign_cells(emb, cents, 8, broadcast_threshold_bytes=0)
-    assert out.assign_broadcast is not None
-    n = out.count()
-    out.assign_broadcast.unpersist()  # release after materialization
-    assert n == 64
-    closure = S.assign_cells(emb, cents, 8)
-    assert not hasattr(closure, "assign_broadcast")
+    with query_scope():
+        assert S.assign_cells(emb, cents, 8, broadcast_threshold_bytes=0).count() == 64
+        assert len(created) == 1 and released == []
+    assert released == created
+    assert S.assign_cells(emb, cents, 8).count() == 64
+    assert len(created) == 1  # closure path: no broadcast
 
 
 def test_semdedup_codes_plan_never_touches_float(spark, tmp_path):
@@ -648,13 +681,13 @@ def test_codes_col_broadcast_path_matches_closure(spark):
                for r in S.ivf_assign(codes, codes_col="__q8").collect()}
     cents = codes.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell_id"), "__q8", "__amax")
-    bdf = S.assign_cells(codes, cents, 8, codes_col="__q8",
-                         broadcast_threshold_bytes=0)
-    bcast = {r.vec_id: r.cell_id for r in bdf.collect()}
+    with query_scope():
+        bcast = {r.vec_id: r.cell_id for r in S.assign_cells(
+            codes, cents, 8, codes_col="__q8",
+            broadcast_threshold_bytes=0).collect()}
     # same 8-centroid geometry via the default derivation? n=500 derives
     # C=8 (max(8, 500//250) clamp), so closure and bcast compare 1:1
     assert bcast == closure and len(bcast) == 500
-    bdf.assign_broadcast.unpersist()
 
 
 def test_ivf_topk_codes_wire_matches_float_probe(spark, tmp_path, monkeypatch):
@@ -670,13 +703,14 @@ def test_ivf_topk_codes_wire_matches_float_probe(spark, tmp_path, monkeypatch):
     int8-routed cell."""
     from real_time_crypto_market_data_pipeline_spark.tables import load
 
-    plans, real = [], S._collect_release
+    plans, real = [], S._codes_query_topk
 
-    def spy(out, handle):
+    def spy(*a, **kw):
+        out = real(*a, **kw)
         plans.append(out._jdf.queryExecution().executedPlan().toString())
-        return real(out, handle)
+        return out
 
-    monkeypatch.setattr(S, "_collect_release", spy)
+    monkeypatch.setattr(S, "_codes_query_topk", spy)
     e = load(spark, "/root/testdata/sf0.001", "embeddings")
     S.sq8_encode(e).write.parquet(str(tmp_path / "codes"))
     codes = spark.read.parquet(str(tmp_path / "codes"))
@@ -697,25 +731,21 @@ def test_ivf_topk_codes_wire_matches_float_probe(spark, tmp_path, monkeypatch):
     assert len(part) == 5 and {r.cell_id for r in part} == {qcell}
 
 
-def test_assign_broadcast_handle_survives_wrappers(emb, monkeypatch):
-    """r12 (ADVICE): .assign_broadcast is a plain Python attribute and
-    dies on any derived frame, so ivf_assign (max_cell drop path) and
-    semantic_dedup must re-attach it (carry_broadcast) - otherwise a
-    post-crossover broadcast has no unpersist path from the public
-    entry points."""
+def test_scope_releases_broadcast_through_wrappers(emb, broadcasts,
+                                                   forced_broadcast):
+    """r12 (ADVICE): the public entry points that wrap assign_cells -
+    ivf_assign (max_cell split + drop path) and semantic_dedup - return
+    derived frames, and their post-crossover broadcast must still have
+    an unpersist path: the enclosing scope releases it."""
     from real_time_crypto_market_data_pipeline_spark.operators import dedup as D
 
-    real = S.assign_cells
-    monkeypatch.setattr(
-        S, "assign_cells",
-        lambda *a, **kw: real(*a, **{**kw, "broadcast_threshold_bytes": 0}))
-    capped = S.ivf_assign(emb, num_cells=8, max_cell=16)   # split + drop path
-    assert capped.assign_broadcast is not None
-    kept = D.semantic_dedup(emb, num_cells=8, threshold=0.9)
-    assert kept.assign_broadcast is not None
-    assert kept.count() > 0
-    kept.assign_broadcast.unpersist()
-    capped.assign_broadcast.unpersist()
+    created, released = broadcasts
+    with query_scope():
+        capped = S.ivf_assign(emb, num_cells=8, max_cell=16)  # split + drop path
+        kept = D.semantic_dedup(emb, num_cells=8, threshold=0.9)
+        assert capped.count() == 64 and kept.count() > 0
+        assert len(created) == 2 and released == []
+    assert sorted(map(id, released)) == sorted(map(id, created))
 
 
 def test_routing_tree_aliases_childless_twins():
@@ -826,12 +856,14 @@ def test_ivf_codes_probes_release_persisted_blocks(spark):
     assignment for exactly one call (query lookup + probe scan share
     the pass) and release it when the k-row result materializes -
     repeated probes in one session must not accumulate corpus-sized
-    executor storage. Pinned via the context's persistent-RDD map,
-    including the absent-query-id early returns."""
+    executor storage. Pinned via the context's persistent-RDD ids,
+    including the absent-query-id early returns: after is a subset of
+    before (a set, not a count, so the ContextCleaner dropping an
+    earlier test's RDD mid-test cannot trip it)."""
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     codes = S.sq8_encode(e).localCheckpoint()  # stable input, off the books
     jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+    before = set(jsc.getPersistentRDDs().keySet())
     for _ in range(2):
         assert S.ivf_topk(codes, query_vec_id=7, k=3, num_cells=4,
                           codes_col="__q8").count() == 3
@@ -841,32 +873,30 @@ def test_ivf_codes_probes_release_persisted_blocks(spark):
                codes_col="__q8").count()
     S.ivf_kmeans_topk(codes, query_vec_id=10**9, k=3, num_cells=2,
                       codes_col="__q8").count()
-    assert jsc.getPersistentRDDs().size() == before
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
 
 
-def test_ivf_codes_probe_releases_assign_broadcast(spark, monkeypatch):
+def test_ivf_codes_probe_releases_its_broadcast(spark, broadcasts,
+                                                forced_broadcast):
     """r14: past the broadcast crossover the codes probe's assignment
-    ships as a SparkContext.broadcast with no handle reachable from the
-    returned local frame - _collect_release must unpersist it along
-    with the persisted corpus blocks, or each probe call leaks one
-    corpus-index broadcast for the session's lifetime."""
-    released = []
-    real = S.assign_cells
-
-    def forced(*a, **kw):
-        out = real(*a, **{**kw, "broadcast_threshold_bytes": 0})
-        bv = out.assign_broadcast
-        orig = bv.unpersist
-        bv.unpersist = lambda *ar, **kws: (released.append(True),
-                                           orig(*ar, **kws))[1]
-        return out
-
-    monkeypatch.setattr(S, "assign_cells", forced)
+    ships as a SparkContext.broadcast that nothing outside the call can
+    reach - the probe's own scope must unpersist it along with the
+    persisted corpus blocks, or each probe call leaks one corpus-index
+    broadcast for the session's lifetime."""
+    created, released = broadcasts
     codes = S.sq8_encode(
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"))
     assert S.ivf_topk(codes, query_vec_id=7, k=3, num_cells=4,
                       codes_col="__q8").count() == 3
-    assert released == [True]
+    assert len(created) == 1 and released == created
+
+
+def test_kmeans_empty_training_sample_fails_loudly(spark):
+    """ADVICE: an empty training sample raises a clear ValueError, not
+    numpy's opaque ``high <= 0`` from the k-means++ init."""
+    empty = spark.createDataFrame([], "vec_id LONG, embedding ARRAY<DOUBLE>")
+    with pytest.raises(ValueError, match="k-means training sample is empty"):
+        S.ivf_kmeans_index(empty, num_cells=2)
 
 
 def test_ann_recall_kmeans_monotone(spark):

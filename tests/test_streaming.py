@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import warnings
 
 import pytest
 
@@ -1107,6 +1108,9 @@ def test_streaming_realized_vol_state_survives_restart(spark, tmp_path):
                 return q
             except Exception as e:  # Py4JJavaError / StreamingQueryException
                 last = e
+                # visible in CI output: a recurring flake must not hide
+                warnings.warn("restarting the stream from its checkpoint after: "
+                              f"{getattr(e, 'java_exception', e)}", stacklevel=2)
                 try:
                     q.stop()
                 except Exception:

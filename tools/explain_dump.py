@@ -8,8 +8,11 @@ import sys
 
 sys.path.insert(0, ".")
 
+import real_time_crypto_market_data_pipeline_spark.operators.similarity as S  # noqa: E402
 from real_time_crypto_market_data_pipeline_spark.plans import QUERIES  # noqa: E402
-from real_time_crypto_market_data_pipeline_spark.session import get_spark  # noqa: E402
+from real_time_crypto_market_data_pipeline_spark.plans.ext_queries import ANN_RECALL_SWEEP  # noqa: E402
+from real_time_crypto_market_data_pipeline_spark.session import get_spark, query_scope  # noqa: E402
+from real_time_crypto_market_data_pipeline_spark.tables import load  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 
@@ -26,7 +29,7 @@ COMMENTARY = {
     "q_token_stats": "Vocabulary census: explode -> partial-aggregated groupBy(token), shuffle O(vocab) not O(corpus); the pre-explode spread is size-gated (8 MB) because for this cheap per-row fan-out the exchange's stage barrier costs more than single-stage tokenization below that (SCALING.md r6 A/B) - a compact-but-large single file still spreads.",
     "q_dedup_jaccard": "Pair generation via shingle equi-join (disjoint pairs pruned by the join); never a cartesian product.",
     "q_dedup_jaccard_pruned": "df-capped Jaccard (the benched form): the hot-shingle census comes back as a broadcast LEFT-ANTI prune on both self-join sides, bounding the equi-join at max_df*n rows where the exact form carries sum(df^2); the distinct shingle table materializes once (lazy localCheckpoint) because the census, the sizes, and BOTH join sides consume it - without that the explode+distinct subtree executes four times (5.6 -> 3.5 s at x10, SCALING.md r15).",
-    "q_ann_recall": "Recall@10 sweep over ONE persisted assignment (r16): the three-level Arrow-BLAS quantizer runs once into an InMemoryRelation; exact ground truth, the centroid ranking (a max(n_probes)-row driver collect), and every probe width read that same cache - the plan's probe legs are InMemoryTableScans of one relation, so the sweep costs ONE corpus assign pass where r15 paid one per width; recall legs stay k-row broadcast semi-joins. The registered form materializes eagerly and releases the cache (the codes-probe discipline); the dump no-ops the release to show the lazy plan.",
+    "q_ann_recall": "Recall@10 sweep over ONE persisted assignment (r16): the three-level Arrow-BLAS quantizer runs once into an InMemoryRelation; exact ground truth, the centroid ranking (a max(n_probes)-row driver collect), and every probe width read that same cache - the plan's probe legs are InMemoryTableScans of one relation, so the sweep costs ONE corpus assign pass where r15 paid one per width; recall legs stay k-row broadcast semi-joins. The registered form collects eagerly in its own query_scope and releases the cache (the codes-probe discipline); the dump shows the lazy plan it collects.",
     "q_media_summary": "Metadata rollup: ReadSchema excludes the binary payload column entirely.",
     "q_asof_join": "As-of join fused into ONE scan (r20): both sides are predicates over the same event stream, so the union collapses into the scan, right-tie resolution moves into the window order (ties sort by value; the carried last_value IS the max), and the previous right-side pre-aggregation exchange disappears - one scan, one shuffle+sort per key, no range-join explosion, no nested loop.",
     "q_sessionize": "Both window passes (lag marking + running sum) share a single exchange+sort on the key.",
@@ -66,9 +69,6 @@ COMMENTARY = {
 
 def main() -> None:
     spark = get_spark("explain-dump")
-    # no-op q_ann_recall's eager cache release so its LAZY plan dumps
-    import real_time_crypto_market_data_pipeline_spark.operators.similarity as S
-    S._collect_release = lambda out, handle: out
     out = [
         "# EXPLAIN — physical plans of the headline queries",
         "",
@@ -78,8 +78,11 @@ def main() -> None:
         "",
     ]
     for name, note in COMMENTARY.items():
-        df = QUERIES[name](spark, SF)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        with query_scope():
+            # q_ann_recall returns its collected rows: dump the lazy sweep
+            df = (S._recall_sweep(load(spark, SF, "embeddings"), **ANN_RECALL_SWEEP)
+                  if name == "q_ann_recall" else QUERIES[name](spark, SF))
+            plan = df._jdf.queryExecution().executedPlan().toString()
         plan = re.sub(r"#\d+L?", "", plan)  # strip expr ids for readable diffs
         plan = re.sub(r", \[plan_id=\d+\]", "", plan)
         out.append(f"## {name}")

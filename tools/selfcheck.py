@@ -12,8 +12,9 @@ files; exit nonzero on evidence >2 rounds old, never-checked, or
 failing-at-latest-check - mechanizing the oldest-first prefix rotation
 (126 queries / 50 slots: steady-state max age 2). Every run starts with a
 testdata schema-contract check (round 2 lost 14 queries to events.ts
-parquet drift). Exit 0 iff the contract holds and every checked query
-matches.
+parquet drift). Each query runs in its own ``query_scope`` and FAILs if it
+leaves a persisted RDD behind. Exit 0 iff the contract holds and every
+checked query matches without leaking.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ import duckdb
 sys.path.insert(0, ".")
 
 from real_time_crypto_market_data_pipeline_spark.plans import ORACLES, QUERIES  # noqa: E402
-from real_time_crypto_market_data_pipeline_spark.session import get_spark  # noqa: E402
+from real_time_crypto_market_data_pipeline_spark.session import get_spark, query_scope  # noqa: E402
 from real_time_crypto_market_data_pipeline_spark.tables import TABLES  # noqa: E402
 
 
@@ -244,15 +245,24 @@ def main() -> int:
 
     names = only or sorted(QUERIES)
     failed = []
+    jsc = spark.sparkContext._jsc
     for name in names:
         fn = QUERIES[name]
         t0 = time.time()
+        before = set(jsc.getPersistentRDDs().keySet())
         try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
+            with query_scope():
+                sdf = fn(spark, sf_dir)
+                s_cols = sdf.columns
+                s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name:24s} spark error: {type(e).__name__}: {e}")
+            failed.append(name)
+            continue
+        # a set difference: the ContextCleaner dropping older ids cannot trip it
+        leaked = sorted(set(jsc.getPersistentRDDs().keySet()) - before)
+        if leaked:
+            print(f"FAIL  {name} leaked persisted RDDs {leaked}")
             failed.append(name)
             continue
         if name not in ORACLES:
