@@ -27,8 +27,16 @@ Drop-policy parity with the reference:
 - empty side: best bid/ask = 0.0                      (normalizer.py:124-125)
 - invalid JSON / non-dict frames: dropped at decode   (okx_ws.py:74-80,92-94)
 
+The reference's per-message function that switches on the channel
+(normalizer.py:82-200) is one projection here: each decoded frame
+builds the array of its complete events (one book, N trades, or none)
+and ``inline`` turns the array into rows, so a query reads its source
+once. The decodable and control predicates (``is_decodable``,
+``is_control``) are shared with the decode-health counters
+(streaming/observability.py).
+
 Everything is built-in column expressions (``from_json``, ``filter``,
-``transform``, ``try_cast``, ``explode``) - whole-stage codegen fuses
+``transform``, ``try_cast``, ``inline``) - whole-stage codegen fuses
 the entire normalize into the scan stage; no Python executes per row.
 At 100 TB the frame stream is partitioned by (symbol, date) upstream,
 and this operator is embarrassingly parallel (no shuffle at all).
@@ -70,41 +78,28 @@ NORMALIZED_EVENT_DDL = (
 )
 
 
-def decode_frames(raw: DataFrame, raw_col: str = "raw") -> DataFrame:
+def parse_frame(raw_col: str = "raw") -> Column:
     """S5: JSON decode with skip-on-error (okx_ws.py:72-94).
 
-    ``from_json`` in PERMISSIVE mode nulls out unparsable input; frames
-    that fail to decode (or decode to non-objects: scalars, arrays)
-    yield an all-null struct and are dropped, reproducing the
-    reference's skip (okx_ws.py:92-94).
+    ``from_json`` in PERMISSIVE mode nulls out unparsable input instead
+    of failing the batch; ``is_decodable`` then tells the frames the
+    reference would skip (okx_ws.py:92-94).
     """
-    parsed = raw.withColumn("_msg", F.from_json(F.col(raw_col), RAW_FRAME_SCHEMA))
-    # A frame counts as decoded iff it was a JSON object with at least
-    # one recognized key - from_json returns a struct of nulls for
-    # "pong", [1,2], or garbage bytes.
-    return parsed.where(
-        F.col("_msg").isNotNull()
-        & (
-            F.col("_msg.event").isNotNull()
-            | F.col("_msg.arg").isNotNull()
-            | F.col("_msg.data").isNotNull()
-        )
+    return F.from_json(F.col(raw_col), RAW_FRAME_SCHEMA)
+
+
+def is_decodable(msg: Column) -> Column:
+    """A frame counts as decoded iff it was a JSON object with at least
+    one recognized key - ``from_json`` returns a struct of nulls for
+    "pong", [1,2], or garbage bytes."""
+    return msg.isNotNull() & (
+        msg["event"].isNotNull() | msg["arg"].isNotNull() | msg["data"].isNotNull()
     )
 
 
-def filter_control_and_malformed(decoded: DataFrame) -> DataFrame:
-    """F1+F2: drop control messages and shape-invalid frames."""
-    m = F.col("_msg")
-    return decoded.where(
-        # F1 control filter (normalizer.py:65-66)
-        ~F.coalesce(m["event"].isin("subscribe", "unsubscribe", "error"), F.lit(False))
-        # F2 shape guards (normalizer.py:69-78)
-        & m["arg"].isNotNull()
-        & m["arg"]["channel"].isNotNull()
-        & m["arg"]["instId"].isNotNull()
-        & m["data"].isNotNull()
-        & (F.size(m["data"]) > 0)
-    )
+def is_control(msg: Column) -> Column:
+    """F1: subscribe/unsubscribe/error control messages (normalizer.py:65-66)."""
+    return F.coalesce(msg["event"].isin("subscribe", "unsubscribe", "error"), F.lit(False))
 
 
 def _parse_levels(levels: Column) -> Column:
@@ -138,90 +133,74 @@ def _parse_levels(levels: Column) -> Column:
     )
 
 
-def normalize_books(frames: DataFrame, top_n: int = 5) -> DataFrame:
-    """books5 branch (normalizer.py:82-159): one frame -> one book event."""
-    m = F.col("_msg")
-    d = frames.where(m["arg"]["channel"] == "books5").withColumn(
-        # F4 head-of-array: books5 carries exactly one item (normalizer.py:84)
-        "_item",
-        F.try_element_at(m["data"], F.lit(1)),
-    )
-    # F6: malformed ts drops the whole message (normalizer.py:87-91)
-    d = d.withColumn("_ts_ms", F.col("_item.ts").try_cast("long")).where(
-        F.col("_ts_ms").isNotNull()
-    )
-    bids = _parse_levels(F.col("_item.bids"))
-    asks = _parse_levels(F.col("_item.asks"))
-    return d.select(
+def _event(msg: Column, channel: str, event_type: str, ts_ms: Column,
+           book: Column, trade: Column) -> Column:
+    """F9: one complete normalized event (FIXTURES.md A4) as a struct."""
+    return F.struct(
         F.lit("okx").alias("exchange"),
-        m["arg"]["instId"].alias("symbol"),
-        F.lit("books5").alias("channel"),
-        F.lit("book_topn").alias("event_type"),
-        F.col("_ts_ms").alias("ts_exchange_ms"),
+        msg["arg"]["instId"].alias("symbol"),
+        F.lit(channel).alias("channel"),
+        F.lit(event_type).alias("event_type"),
+        ts_ms.alias("ts_exchange_ms"),
         F.col("ts_recv_epoch_ms"), F.col("ts_recv_mono_ns"),
         F.col("ts_decoded_mono_ns"), F.col("ts_proc_mono_ns"),
-        F.struct(
-            F.lit(top_n).cast("int").alias("n"),
-            # F8 best bid/ask with 0.0 default (normalizer.py:124-125)
-            F.coalesce(F.try_element_at(bids, F.lit(1))["price"], F.lit(0.0)).alias(
-                "best_bid"
-            ),
-            F.coalesce(F.try_element_at(asks, F.lit(1))["price"], F.lit(0.0)).alias(
-                "best_ask"
-            ),
-            bids.alias("bids"),
-            asks.alias("asks"),
-        ).alias("book"),
-        F.lit(None).cast(TRADE_STRUCT_DDL).alias("trade"),
+        book.alias("book"),
+        trade.alias("trade"),
     )
 
 
-def normalize_trades(frames: DataFrame) -> DataFrame:
-    """trades branch (normalizer.py:161-200): one frame -> N trade events.
-
-    F5 fan-out via ``explode``; F6 malformed-ts policy skips the item
-    only, keeping siblings (normalizer.py:164-168).
-    """
-    m = F.col("_msg")
-    d = (
-        frames.where(m["arg"]["channel"] == "trades")
-        .select(
-            m["arg"]["instId"].alias("symbol"),
-            "ts_recv_epoch_ms",
-            "ts_recv_mono_ns",
-            "ts_decoded_mono_ns",
-            "ts_proc_mono_ns",
-            F.explode(m["data"]).alias("_item"),
-        )
-        .withColumn("_ts_ms", F.col("_item.ts").try_cast("long"))
-        .withColumn("_px", F.col("_item.px").try_cast("double"))
-        .withColumn("_sz", F.col("_item.sz").try_cast("double"))
-        .where(
-            F.col("_ts_ms").isNotNull()
-            & F.col("_px").isNotNull()
-            & F.col("_sz").isNotNull()
-        )
+def _book_events(msg: Column) -> Column:
+    """books5 (normalizer.py:82-159): one frame -> one book event, or none
+    when its ts is malformed - F6 drops the whole message (normalizer.py:87-91)."""
+    # F4 head-of-array: books5 carries exactly one item (normalizer.py:84)
+    item = F.try_element_at(msg["data"], F.lit(1))
+    ts_ms = item["ts"].try_cast("long")
+    bids = _parse_levels(item["bids"])
+    asks = _parse_levels(item["asks"])
+    book = F.struct(
+        F.lit(5).alias("n"),
+        # F8 best bid/ask with 0.0 default (normalizer.py:124-125)
+        F.coalesce(F.try_element_at(bids, F.lit(1))["price"], F.lit(0.0)).alias("best_bid"),
+        F.coalesce(F.try_element_at(asks, F.lit(1))["price"], F.lit(0.0)).alias("best_ask"),
+        bids.alias("bids"),
+        asks.alias("asks"),
     )
-    return d.select(
-        F.lit("okx").alias("exchange"),
-        F.col("symbol"),
-        F.lit("trades").alias("channel"),
-        F.lit("trade").alias("event_type"),
-        F.col("_ts_ms").alias("ts_exchange_ms"),
-        F.col("ts_recv_epoch_ms"), F.col("ts_recv_mono_ns"),
-        F.col("ts_decoded_mono_ns"), F.col("ts_proc_mono_ns"),
-        F.lit(None).cast(BOOK_STRUCT_DDL).alias("book"),
-        F.struct(
-            F.col("_px").alias("price"),
-            F.col("_sz").alias("size"),
-            F.col("_item.side").alias("side"),
-            F.col("_item.tradeId").alias("trade_id"),
-        ).alias("trade"),
+    event = _event(msg, "books5", "book_topn", ts_ms, book,
+                   F.lit(None).cast(TRADE_STRUCT_DDL))
+    return F.when(ts_ms.isNotNull(), F.array(event))
+
+
+def _trade_events(msg: Column) -> Column:
+    """trades (normalizer.py:161-200): one frame -> one event per item; F6
+    skips an item with a malformed ts, keeping its siblings
+    (normalizer.py:164-168)."""
+    events = F.transform(
+        msg["data"],
+        lambda item: _event(
+            msg, "trades", "trade", item["ts"].try_cast("long"),
+            F.lit(None).cast(BOOK_STRUCT_DDL),
+            F.struct(
+                item["px"].try_cast("double").alias("price"),
+                item["sz"].try_cast("double").alias("size"),
+                item["side"].alias("side"),
+                item["tradeId"].alias("trade_id"),
+            ),
+        ),
+    )
+    return F.filter(
+        events,
+        lambda e: e["ts_exchange_ms"].isNotNull()
+        & e["trade"]["price"].isNotNull()
+        & e["trade"]["size"].isNotNull(),
     )
 
 
 def normalize_frames(raw: DataFrame, raw_col: str = "raw") -> DataFrame:
-    """Full S5+F1-F9 pipeline: raw frame text -> normalized event union.
+    """Full S5+F1-F9 pipeline: raw frame text -> normalized events.
+
+    One pass: each surviving frame builds the array of its complete
+    events - F3 dispatches on the channel, any other channel yields
+    none - and ``inline`` (F5) turns the array into rows.
 
     ``ts_proc_mono_ns`` is stamped as the decode timestamp in batch
     (the reference stamps it at normalize time, normalizer.py:136,177;
@@ -230,8 +209,17 @@ def normalize_frames(raw: DataFrame, raw_col: str = "raw") -> DataFrame:
     """
     if "ts_proc_mono_ns" not in raw.columns:
         raw = raw.withColumn("ts_proc_mono_ns", F.col("ts_decoded_mono_ns"))
-    frames = filter_control_and_malformed(decode_frames(raw, raw_col))
-    return normalize_books(frames).unionByName(normalize_trades(frames))
+    m = F.col("_msg")
+    channel = m["arg"]["channel"]
+    # F2 shape guards (normalizer.py:69-78): a frame without channel or
+    # data yields no event in either branch
+    frames = raw.withColumn("_msg", parse_frame(raw_col)).where(
+        is_decodable(m) & ~is_control(m) & m["arg"]["instId"].isNotNull()
+    )
+    events = F.when(channel == "books5", _book_events(m)).when(
+        channel == "trades", _trade_events(m)
+    )
+    return frames.select(F.inline(events))
 
 
 def derived_columns(events: DataFrame) -> DataFrame:

@@ -475,9 +475,9 @@ def mix_thresholds(docs: DataFrame, source_col: str = "source") -> DataFrame:
 
     Split out so the thresholds can be materialized once and reused -
     in particular broadcast into a STREAMING ingest filter
-    (``streaming.pipeline.streaming_temperature_mix``), where the
-    census must come from a batch pass (a global census is not
-    computable inside an unbounded stream)."""
+    (``apply_mix`` on a stream), where the census must come from a
+    batch pass (a global census is not computable inside an unbounded
+    stream)."""
     from pyspark.sql.window import Window
 
     counts = docs.groupBy(source_col).agg(
@@ -503,7 +503,10 @@ def apply_mix(
     """The filter half of ``temperature_mix``: keep a doc iff its md5
     bucket clears its source's threshold. Pure row-local predicate
     after the broadcast join - works identically on a batch frame or
-    a streaming microbatch (stateless stream-static join)."""
+    a streaming microbatch (stateless stream-static join). On a stream
+    the static census is re-evaluated every microbatch, so refreshing
+    the materialized census in place retunes the mix on the next
+    trigger without a restart."""
     bucket = F.conv(F.substring(F.md5(F.col(text_col)), 1, 6), 16, 10).cast("bigint")
     return (
         docs.join(F.broadcast(thresholds), source_col)

@@ -33,6 +33,7 @@ text plus stamps, and decode/normalize run as Catalyst expressions
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import time
@@ -89,22 +90,20 @@ class ReplayStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"line": 0}
 
-    def _lines(self) -> list[str]:
+    def _rows(self, lo: int, hi: int) -> list[tuple]:
+        """Frames ``lo`` until ``hi`` (indexes of non-blank lines), stamped."""
         with open(self.path, encoding="utf-8") as f:
-            return [ln.rstrip("\n") for ln in f if ln.strip()]
+            lines = (ln.rstrip("\n") for ln in f if ln.strip())
+            return [(ln, *_stamp(i))
+                    for i, ln in enumerate(itertools.islice(lines, lo, hi), lo)]
 
     def read(self, start: dict):
-        lines = self._lines()
         lo = start["line"]
-        hi = min(lo + self.batch_size, len(lines))
-        rows = [(lines[i], *_stamp(i)) for i in range(lo, hi)]
-        return iter(rows), {"line": hi}
+        rows = self._rows(lo, lo + self.batch_size)
+        return iter(rows), {"line": lo + len(rows)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        lines = self._lines()
-        return iter(
-            [(lines[i], *_stamp(i)) for i in range(start["line"], min(end["line"], len(lines)))]
-        )
+        return iter(self._rows(start["line"], end["line"]))
 
     def commit(self, end: dict) -> None:
         pass
@@ -155,8 +154,6 @@ class LiveOkxStreamReader(SimpleDataSourceStreamReader):
         ]
         self.max_per_trigger = int(options.get("maxframespertrigger", "1000"))
         self.backoff = BackoffPolicy()
-        self._buffer: list[tuple] = []
-        self._counter = 0
         self._ws = None
 
     def initialOffset(self) -> dict:
@@ -193,7 +190,6 @@ class LiveOkxStreamReader(SimpleDataSourceStreamReader):
     def read(self, start: dict):  # pragma: no cover - network path
         self._ensure_connection()
         rows = []
-        mono0 = time.monotonic_ns()
         for _ in range(self.max_per_trigger):
             try:
                 frame = self._ws.recv(timeout=0.1)
@@ -209,7 +205,6 @@ class LiveOkxStreamReader(SimpleDataSourceStreamReader):
             raw = frame if isinstance(frame, str) else frame.decode("utf-8", "replace")
             decoded_mono_ns = time.monotonic_ns()
             rows.append((raw, recv_epoch_ms, recv_mono_ns, decoded_mono_ns))
-        _ = mono0
         n = start["frame"] + len(rows)
         return iter(rows), {"frame": n}
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.normalize import RAW_FRAME_SCHEMA
+from ..operators.normalize import is_control, is_decodable, parse_frame
 
 OBSERVATION_NAME = "pipeline_counters"
 
@@ -31,23 +31,13 @@ def observe_decode_health(raw: DataFrame, raw_col: str = "raw") -> DataFrame:
     control_frames - the reference's decode_errors counter
     (okx_ws.py:92-94 skip path) as an observed metric.
     """
-    parsed = F.from_json(F.col(raw_col), RAW_FRAME_SCHEMA)
-    is_decodable = (
-        parsed.isNotNull()
-        & (
-            parsed["event"].isNotNull()
-            | parsed["arg"].isNotNull()
-            | parsed["data"].isNotNull()
-        )
-    )
-    is_control = F.coalesce(
-        parsed["event"].isin("subscribe", "unsubscribe", "error"), F.lit(False)
-    )
+    parsed = parse_frame(raw_col)
+    decodable = is_decodable(parsed)
     return raw.observe(
         OBSERVATION_NAME,
         F.count(F.lit(1)).alias("frames_total"),
-        F.sum(F.when(~is_decodable, 1).otherwise(0)).alias("decode_errors"),
-        F.sum(F.when(is_decodable & is_control, 1).otherwise(0)).alias(
+        F.sum(F.when(~decodable, 1).otherwise(0)).alias("decode_errors"),
+        F.sum(F.when(decodable & is_control(parsed), 1).otherwise(0)).alias(
             "control_frames"
         ),
     )

@@ -206,25 +206,3 @@ def stream_stream_enrich(
         ),
     )
 
-
-def streaming_temperature_mix(
-    doc_stream: DataFrame,
-    thresholds: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """X4 (streaming): apply temperature mixing at ingest.
-
-    The census (``text.mix_thresholds``) is computed in batch over the
-    existing corpus - a global source distribution is not computable inside an
-    unbounded stream - and broadcast into a STATELESS stream-static join; the
-    keep/drop decision is then a row-local md5-bucket comparison, so the
-    stream side stays shuffle-free and state-free. Because the static side is
-    re-evaluated every microbatch, refreshing the materialized census in place
-    retunes the mix on the next trigger without restarting the stream. Exact
-    same kept-set semantics as the batch operator (``text.temperature_mix``)
-    by construction: both halves share the same code.
-    """
-    from ..operators.text import apply_mix
-
-    return apply_mix(doc_stream, thresholds, source_col=source_col, text_col=text_col)

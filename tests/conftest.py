@@ -57,6 +57,9 @@ def raw_frames(spark):
         "pong",
         "[1, 2]",
         "{not json",
+        # valid frame on a channel nobody subscribed to -> no event
+        '{"arg": {"channel": "tickers", "instId": "XRP-USDT"},'
+        ' "data": [{"ts": "1735689600500", "last": "2.5"}]}',
     ]
     rows = [
         (raw, 1735689600441 + i, 1_000_000_000 + i * 1000, 1_000_012_345 + i * 1000)

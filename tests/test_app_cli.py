@@ -32,7 +32,18 @@ def test_replay_requires_path():
         parse_args(["--mode", "replay"])
 
 
-def test_main_replay_end_to_end(tmp_path, capsys):
+@pytest.fixture()
+def stop_calls(monkeypatch):
+    """``main`` ends by stopping its SparkSession, which is the test
+    session here; record the call instead of stopping it."""
+    from pyspark.sql import SparkSession
+
+    calls = []
+    monkeypatch.setattr(SparkSession, "stop", lambda self: calls.append(self))
+    return calls
+
+
+def test_main_replay_end_to_end(tmp_path, capsys, stop_calls):
     frames = [
         '{"arg": {"channel": "books5", "instId": "BTC-USDT"},'
         ' "data": [{"ts": "1000", "bids": [["10", "1", "0", "1"]], "asks": [["11", "1", "0", "1"]]}]}',
@@ -73,9 +84,10 @@ def test_main_replay_end_to_end(tmp_path, capsys):
         assert c["frames_total"] == 3
         assert c["decode_errors"] == 1
         assert c["control_frames"] == 0
+    assert len(stop_calls) == 1
 
 
-def test_main_passes_url_to_source(tmp_path, monkeypatch):
+def test_main_passes_url_to_source(tmp_path, monkeypatch, stop_calls):
     """--url reaches the source as its ``url`` option."""
     from pyspark.sql.streaming import DataStreamReader
 
@@ -101,3 +113,4 @@ def test_main_passes_url_to_source(tmp_path, monkeypatch):
     )
     assert rc == 0
     assert ("url", "wss://example/ws") in seen
+    assert len(stop_calls) == 1

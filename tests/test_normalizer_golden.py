@@ -41,6 +41,8 @@ def test_control_and_shape_frames_dropped(raw_frames):
     # none of the control/malformed frames produce SOL/other rows beyond the 5
     assert ev.where("exchange <> 'okx'").count() == 0
     assert ev.where("channel NOT IN ('books5', 'trades')").count() == 0
+    # a well-formed frame on an unsubscribed channel (tickers) yields nothing
+    assert ev.where("symbol = 'XRP-USDT'").count() == 0
 
 
 def test_bad_ts_books5_drops_whole_message(raw_frames):

@@ -59,6 +59,36 @@ def test_backoff_exponential_capped_jittered():
     assert b.delay(3, now=7.5) == pytest.approx(2.0 * 1.0)
 
 
+def test_replay_reader_offsets_skip_blank_lines(tmp_path):
+    """Offsets index the non-blank lines; a batched ``read`` and one
+    ``readBetweenOffsets`` deliver the same frames with the same stamps."""
+    from real_time_crypto_market_data_pipeline_spark.sources.okx_ws import (
+        ReplayStreamReader,
+    )
+
+    path = tmp_path / "blank.jsonl"
+    path.write_text("a\n\nb\n   \nc\n\n\nd\ne\n\n")
+    reader = ReplayStreamReader({"path": str(path), "batchsize": "2"})
+    want = [
+        (ln, 1_735_689_600_000 + i, 1_000_000_000 + i * 1_000,
+         1_000_000_000 + i * 1_000 + 12_345)
+        for i, ln in enumerate("abcde")
+    ]
+    got, offset, ends = [], reader.initialOffset(), []
+    while True:
+        rows, offset = reader.read(offset)
+        rows = list(rows)
+        if not rows:
+            break
+        got += rows
+        ends.append(offset["line"])
+    assert got == want
+    assert ends == [2, 4, 5]
+    assert offset == {"line": 5}  # at the end, the offset stays put
+    assert list(reader.readBetweenOffsets({"line": 0}, offset)) == want
+    assert list(reader.readBetweenOffsets({"line": 1}, {"line": 3})) == want[1:3]
+
+
 def test_replay_source_to_normalized_memory_sink(spark, replay_path, tmp_path):
     raw = P.read_raw_stream(spark, mode="replay", path=replay_path, batch_size=3)
     events = normalize_frames(raw)
@@ -422,6 +452,27 @@ def test_observed_counters(spark, tmp_path):
     assert counters["frames_total"] == 5
     assert counters["decode_errors"] == 2  # garbage{{ and pong
     assert counters["control_frames"] == 1  # the subscribe frame
+
+
+def test_normalize_reads_each_frame_once(spark, tmp_path):
+    """A normalize query scans its source once: 3 replayed frames (a
+    book, a trade, an undecodable one) are 3 input rows, not one per
+    channel branch."""
+    from real_time_crypto_market_data_pipeline_spark.sources.okx_ws import write_replay_file
+
+    path = write_replay_file(str(tmp_path / "once.jsonl"), [FRAMES[0], FRAMES[3], "pong"])
+    raw = P.read_raw_stream(spark, mode="replay", path=path, batch_size=10)
+    q = (
+        normalize_frames(raw).writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt_once"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        read = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert read == [3]
 
 
 def test_compaction_preserves_rows(spark, replay_path, tmp_path):
@@ -827,11 +878,9 @@ def test_streaming_temperature_mix_matches_batch(spark, tmp_path):
     )
 
     from real_time_crypto_market_data_pipeline_spark.operators.text import (
+        apply_mix,
         mix_thresholds,
         temperature_mix,
-    )
-    from real_time_crypto_market_data_pipeline_spark.streaming.pipeline import (
-        streaming_temperature_mix,
     )
 
     schema = StructType(
@@ -850,9 +899,7 @@ def test_streaming_temperature_mix_matches_batch(spark, tmp_path):
 
     thresholds = mix_thresholds(docs)  # batch census over the corpus
     out = (
-        streaming_temperature_mix(
-            spark.readStream.schema(schema).parquet(src), thresholds
-        )
+        apply_mix(spark.readStream.schema(schema).parquet(src), thresholds)
         .writeStream.format("memory")
         .queryName("mix_out")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
